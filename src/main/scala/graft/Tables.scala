@@ -19,12 +19,14 @@ object Tables {
     * inference entirely. METADATA reuse only: no rows or results are
     * cached, every query still computes from the parquet bytes, and the
     * scan's ReadSchema/PushedFilters are unchanged (plans/r16
-    * before/after dumps are byte-identical). Keyed by (path, the two
-    * parquet-inference confs) because inference maps TIMESTAMP(NANOS)/NTZ
-    * columns differently under those flags — a session with different
-    * settings must re-infer, never inherit a schema inferred under other
-    * rules. Assumes table dirs are immutable within a JVM — the same
-    * assumption every store fixture memo in this engine already makes.
+    * before/after dumps are structurally identical). Keyed by (path,
+    * every conf that changes parquet inference) because inference maps
+    * TIMESTAMP(NANOS)/NTZ columns, unannotated binary, INT96, merged
+    * footers and column-name case differently under those flags — a
+    * session with different settings must re-infer, never inherit a
+    * schema inferred under other rules. Assumes table dirs are immutable
+    * within a JVM — the same assumption every store fixture memo in this
+    * engine already makes.
     */
   private val schemaCache = scala.collection.concurrent.TrieMap
     .empty[(String, String), org.apache.spark.sql.types.StructType]
@@ -39,9 +41,14 @@ object Tables {
     */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val confKey =
-      spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") + "|" +
-        spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    val confKey = Seq(
+      "spark.sql.legacy.parquet.nanosAsLong" -> "false",
+      "spark.sql.parquet.inferTimestampNTZ.enabled" -> "true",
+      "spark.sql.parquet.mergeSchema" -> "false",
+      "spark.sql.parquet.binaryAsString" -> "false",
+      "spark.sql.parquet.int96AsTimestamp" -> "true",
+      "spark.sql.caseSensitive" -> "false"
+    ).map { case (k, default) => spark.conf.get(k, default) }.mkString("|")
     val schema = schemaCache.getOrElseUpdate((path, confKey),
       spark.read.parquet(path).schema)
     val df = spark.read.schema(schema).parquet(path)

@@ -261,7 +261,7 @@ object CorpusSim {
       // 5.58/5.75 s for this join form — the checkpoint of the per-doc
       // ARRAY table (corpus-wide shingle arrays serialized to block
       // storage, then read back by all three consumers) costs more than
-      // re-running the codegen'd df-join + collect_list aggregate per
+      // re-running the codegen'd df-join + list aggregate per
       // consumer. Both halves of the r15 bundle are now individually
       // measured negative; the join form stands.)
       val lists = bg.join(df, "shingle")

@@ -24,7 +24,7 @@ import graft.sources.LandedFiles
   *     file's name still pins its first offset.
   *   - IDEMPOTENCE (D3): group membership is a pure function of
   *     (partitioner encoding, offsets, target flush size), so a re-run
-  *     rewrites byte-identical files under identical names and deletes
+  *     rewrites the same records under identical names and deletes
   *     nothing. A crash between write and delete converges on re-run:
   *     surviving outputs are recognized (overwrite-create), coexisting
   *     old+new duplicates collapse under the (topic, partition, offset)
@@ -39,9 +39,9 @@ import graft.sources.LandedFiles
   * ingest after the input scan is not in the snapshot and is never
   * deleted, so its records cannot be lost.
   *
-  * Scale shape: ONE distributed job — scan → repartition by target file →
-  * write (the sink's own shuffle); the driver touches only O(#files)
-  * metadata for the delete sweep, exactly like the sink's commit path.
+  * Scale shape: ONE distributed job — scan → repartition by writer key →
+  * write and rename in the task (the sink's own shuffle and loop); the
+  * driver touches only O(#files) metadata for the delete sweep.
   *
   * The landed payload must carry the record `offset` column (the parity
   * pipeline's parquet format writes it by default): per-row offsets are
@@ -101,10 +101,10 @@ object Compaction {
   }
 
   /** Delete every snapshot file that is not also a compaction output.
-    * Driver-side, O(#files) metadata — the same budget as the sink's own
-    * rename pass. Only paths from `inputSnapshot` are ever deleted; `keep`
-    * (this run's outputs) wins when an output reuses an input's name
-    * (identical group boundaries → byte-identical rewrite in place).
+    * Driver-side, O(#files) metadata ops. Only paths from `inputSnapshot`
+    * are ever deleted; `keep` (this run's outputs) wins when an output
+    * reuses an input's name (identical group boundaries → the same
+    * records rewritten in place).
     */
   private[sink] def sweepStaleInputs(
       fs: org.apache.hadoop.fs.FileSystem,

@@ -81,8 +81,9 @@ final case class AvroFormat(codec: String = "null") extends OutputFormat {
   }
 }
 
-/** F4/F5: Parquet at rest. Written by Spark's native vectorized parquet
-  * writer (+ deterministic rename, see [[OffsetNamedSink.writeBatchParquet]])
+/** F4/F5: Parquet at rest. Written by Spark's own parquet writer factory
+  * to a hidden temp file in the target directory, then renamed in the
+  * task to its offset name (see [[OffsetNamedSink.writeBatchParquet]])
   * — the Spark-first replacement for `AvroParquetWriter`
   * (`ParquetAvroRecordWriterProvider.java:78-87`). The F5 JSON→schema path
   * is `from_json(value, schema)` upstream: Spark's `StructType` replaces

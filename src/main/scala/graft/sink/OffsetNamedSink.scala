@@ -1,43 +1,57 @@
 package graft.sink
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.expressions.Window
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.util.SerializableConfiguration
 
-import graft.core.PipelineConfig
+import graft.core.{PipelineConfig, Retry}
 import graft.partition.{Partitioner, RecordTimestamp, TimestampExtractor}
 
 /** The parity sink: offset-exact, deterministically-named file commits
   * (SURVEY.md §2.4 R1–R7, §2.6 D1–D3, §4.2).
   *
   * The reference's 405-line `TopicPartitionWriter` state machine
-  * (`storage/TopicPartitionWriter.java:144-155,179-212`) collapses into a
-  * declarative plan:
+  * (`storage/TopicPartitionWriter.java:144-155,179-212`) becomes one
+  * shuffle plus one executor loop per batch:
   *
   *   - routing  (P*): one derived column `__enc` (`encodePartition`,
   *     `TopicPartitionWriter.java:194`)
-  *   - R1 flush.size: `__fileIdx = (row_number per writer-key ordered by
-  *     offset - 1) / flushSize` (`TopicPartitionWriter.java:231-237`)
-  *   - R2 event-time rotation: `__timeBucket = floor(ts/interval)` joins
-  *     the writer key (`TopicPartitionWriter.java:343-346`)
+  *   - R2 event-time rotation: `__tb = floor(ts/interval)` joins the
+  *     writer key (`TopicPartitionWriter.java:343-346`)
   *   - R3 partition-change rotation: implicit — `__enc` is part of the key
   *   - R5 schema-change rotation: an `extraGroupCols` schema-id column
-  *     (NONE mode); BACKWARD/FORWARD project via
+  *     `__xg` (NONE mode); BACKWARD/FORWARD project via
   *     [[graft.schema.SchemaCompat.project]] upstream instead
-  *   - D1 offset-exact naming: `__startOffset = min(offset)` per file
-  *     group → `<topic>+<partition>+<zero-padded start><ext>`
+  *   - R1 flush.size: the loop walks each writer-key group in offset order
+  *     and rolls a file every `flushSize` rows
+  *     (`TopicPartitionWriter.java:231-237`)
+  *   - D1 offset-exact naming: each file is named by its first offset,
+  *     `<topic>+<partition>+<zero-padded start><ext>`
   *     (`TopicPartitionWriter.java:268-285`)
   *   - D3 idempotent replay: names are pure functions of the data, files
   *     are overwrite-created (`OSSStorage.java:78-90`), so re-running a
-  *     batch rewrites byte-identical objects (README.md:123)
+  *     batch rewrites the same names holding the same records. The bytes
+  *     are identical too for json and bytes. An avro file starts from a
+  *     random sync marker, and parquet footers list each column chunk's
+  *     encodings in an order that can differ between JVMs (parquet-mr
+  *     keeps them in a hash set), so a replayed avro or parquet file may
+  *     differ from the original in those bytes.
   *
-  * Scale: the only shuffle is `repartition(__path)` — one pass, keyed by
-  * output file, so 1000 executors write 1000 files concurrently and no
-  * executor ever holds more than its files' rows. Nothing is collected to
-  * the driver except O(#files) metadata.
+  * Scale: the only shuffle is `repartition` on the writer key (topic,
+  * partition, `__enc`, `__tb`, `__xg`), sorted by offset within
+  * partitions — one pass, so 1000 executors write 1000 key groups
+  * concurrently and the loop holds at most one file's rows (json, bytes
+  * and avro, up to [[RetryBufferRows]]) or none (parquet). The same job
+  * returns one manifest row per written file; nothing else reaches the
+  * driver.
   *
   * Works against any Hadoop FileSystem URI — `file:/` in tests, `oss://`
   * with hadoop-aliyun on the classpath (`OSSStorage.java:48-57` analog).
@@ -58,64 +72,23 @@ object OffsetNamedSink {
     */
   final case class BatchResult(files: Seq[CommittedFile], offsetsToCommit: Map[(String, Int), Long])
 
-  /** Adds the file-group columns. Input must carry `topic` (string),
-    * `partition` (int), `offset` (long), plus whatever the partitioner /
-    * extractor reference.
+  /** Writes one file's rows (which it must drain) to a path relative to
+    * the sink's base directory.
     */
-  def withFileGroups(
-      df: DataFrame,
-      cfg: PipelineConfig,
-      partitioner: Partitioner,
-      extractor: TimestampExtractor = RecordTimestamp,
-      extension: String,
-      extraGroupCols: Seq[Column] = Nil): DataFrame = {
-    val enc = partitioner.encodePartition
-    val timeBucket =
-      if (cfg.rotateIntervalMs > 0)
-        floor(unix_millis(extractor.ts) / cfg.rotateIntervalMs).cast("long")
-      else lit(0L)
-    val withKeys = df
-      .withColumn("__enc", enc)
-      .withColumn("__tb", timeBucket)
-      .withColumn("__xg", if (extraGroupCols.nonEmpty) concat_ws("", extraGroupCols: _*) else lit(""))
-    val writerKey = Seq(col("topic"), col("partition"), col("__enc"), col("__tb"), col("__xg"))
-    val rn = row_number().over(
-      Window.partitionBy(writerKey: _*).orderBy(col("offset")))
-    val withIdx = withKeys.withColumn("__fileIdx", ((rn - 1) / cfg.flushSize).cast("long"))
-    val fileKey = writerKey :+ col("__fileIdx")
-    val start = min(col("offset")).over(Window.partitionBy(fileKey: _*))
-    withIdx
-      .withColumn("__startOffset", start)
-      .withColumn("__dir",
-        concat_ws(cfg.dirDelim, lit(cfg.topicsDir), col("topic"), col("__enc")))
-      .withColumn("__fname",
-        concat(
-          col("topic"), lit(cfg.fileDelim),
-          col("partition").cast("string"), lit(cfg.fileDelim),
-          lpad(col("__startOffset").cast("string"), cfg.zeroPadWidth, "0"),
-          lit(extension)))
-      .withColumn("__path", concat(col("__dir"), lit(cfg.dirDelim), col("__fname")))
-  }
+  private type FileWriter = (String, Iterator[InternalRow]) => Unit
 
-  /** Hadoop conf entries travel to executors as a plain serializable map. */
-  private def confEntries(df: DataFrame): Array[(String, String)] = {
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val it = conf.iterator()
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    while (it.hasNext) { val e = it.next(); buf += ((e.getKey, e.getValue)) }
-    buf.toArray
-  }
+  // Column layout of the rows the write loop reads: the writer key, the
+  // file's directory and name prefix, the record offset, then the payload.
+  private val KeyWidth = 5
+  private val DirCol = 5
+  private val PrefixCol = 6
+  private val OffsetCol = 7
+  private val PayloadCol = 8
 
-  private def buildConf(entries: Array[(String, String)]): Configuration = {
-    val c = new Configuration(false)
-    entries.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
-
-  /** Streamed byte-writer path (JSON F1 / ByteArray F2 / Avro F3): rows are
-    * repartitioned by target file and appended in offset order through a
-    * Hadoop FS stream — the executor-side analog of `RecordWriter.write`,
-    * one open stream per file at a time per task.
+  /** Byte-writer path (JSON F1 / ByteArray F2 / Avro F3): each file's rows
+    * are appended in offset order through a Hadoop FS stream — the
+    * executor-side analog of `RecordWriter.write`, one open stream at a
+    * time per task.
     *
     * `payload` must be: a string column (JSON), a binary column
     * (ByteArray), or a struct column (Avro).
@@ -129,111 +102,82 @@ object OffsetNamedSink {
       payload: Column,
       extractor: TimestampExtractor = RecordTimestamp,
       extraGroupCols: Seq[Column] = Nil): BatchResult = {
-
-    // persist: the grouped plan feeds BOTH the write pass and the metadata
-    // pass — without it the whole upstream plan re-executes for metadata,
-    // and a Wallclock extractor could even re-bucket differently between
-    // the two passes, reporting files that were never written
-    val grouped = withFileGroups(df, cfg, partitioner, extractor, format.extension, extraGroupCols)
-      .withColumn("__payload", payload)
-      .persist()
-    val rows = grouped.select(col("__path"), col("offset"), col("__payload"))
-    val payloadType = rows.schema("__payload").dataType
-    val entries = confEntries(df)
-    val base = baseDir
-
-    val retryBackoffMs = cfg.retryBackoffMs
-    val writeMaxAttempts = cfg.writeMaxAttempts
-    rows
-      .repartition(col("__path"))
-      .sortWithinPartitions(col("__path"), col("offset"))
-      .foreachPartition { (it: Iterator[Row]) =>
-        val conf = buildConf(entries)
-        var fs: FileSystem = null
-        var avroSchema: org.apache.avro.Schema = null
-        val structType = payloadType match {
-          case st: StructType => st
-          case _ => null
-        }
-        // One whole-file write attempt: open (overwrite-create,
-        // OSSStorage.java:78-90), append every row, close.
-        def writeOnce(path: String, fileRows: Iterator[Row]): Unit = {
-          val p = new Path(base, path)
-          if (fs == null) fs = p.getFileSystem(conf)
-          var out: java.io.OutputStream = null
-          var avro: org.apache.avro.file.DataFileWriter[org.apache.avro.generic.GenericRecord] = null
-          val raw = new java.io.BufferedOutputStream(fs.create(p, true), 1 << 16)
-          try {
-            format match {
-              case j: JsonFormat => out = j.compression.wrap(raw)
-              case b: ByteArrayFormat => out = b.compression.wrap(raw)
-              case a: AvroFormat =>
-                if (avroSchema == null) avroSchema = AvroSupport.toAvroSchema(structType)
-                avro = AvroSupport.containerWriter(raw, avroSchema, a.codecFactory)
-              case _: ParquetFormat =>
-                throw new IllegalArgumentException("use writeBatchParquet for parquet")
-            }
-            fileRows.foreach { r =>
-              // null payloads (Kafka tombstones) are skipped, not written —
-              // one delete marker must not poison the whole micro-batch
-              if (!r.isNullAt(2)) format match {
-                case j: JsonFormat =>
-                  out.write(r.getString(2).getBytes("UTF-8")); out.write(j.lineSeparator)
-                case b: ByteArrayFormat =>
-                  out.write(r.getAs[Array[Byte]](2)); out.write(b.separator)
-                case _: AvroFormat =>
-                  avro.append(AvroSupport.toGenericRecord(r.getStruct(2), structType, avroSchema))
-                case _ => ()
-              }
-            }
-          } finally {
-            if (avro != null) avro.close() else if (out != null) out.close() else raw.close()
+    require(!format.isInstanceOf[ParquetFormat], "use writeBatchParquet for parquet")
+    val rows = prepare(df, cfg, partitioner, extractor, extraGroupCols, Seq(payload))
+    val structType = rows.schema(PayloadCol).dataType match {
+      case st: StructType => st
+      case _ => null
+    }
+    val conf = new SerializableConfiguration(df.sparkSession.sparkContext.hadoopConfiguration)
+    val (attempts, backoffMs) = (cfg.writeMaxAttempts, cfg.retryBackoffMs)
+    // records = payload rows actually written: tombstones are skipped
+    land(rows, cfg, format.extension, countNulls = false) { () =>
+      var fs: FileSystem = null
+      var avroSchema: org.apache.avro.Schema = null
+      val toRow = if (structType == null) null else CatalystTypeConverters.createToScalaConverter(structType)
+      // One whole-file write attempt: open (overwrite-create,
+      // OSSStorage.java:78-90), append every row, close.
+      def writeOnce(path: String, fileRows: Iterator[InternalRow]): Unit = {
+        val p = new Path(baseDir, path)
+        if (fs == null) fs = p.getFileSystem(conf.value)
+        var out: java.io.OutputStream = null
+        var avro: org.apache.avro.file.DataFileWriter[org.apache.avro.generic.GenericRecord] = null
+        val raw = new java.io.BufferedOutputStream(fs.create(p, true), 1 << 16)
+        try {
+          format match {
+            case j: JsonFormat => out = j.compression.wrap(raw)
+            case b: ByteArrayFormat => out = b.compression.wrap(raw)
+            case a: AvroFormat =>
+              if (avroSchema == null) avroSchema = AvroSupport.toAvroSchema(structType)
+              avro = AvroSupport.containerWriter(raw, avroSchema, a.codecFactory)
+            case _: ParquetFormat => ()
           }
-        }
-        // One FILE is the retry unit, like the reference's record buffer +
-        // retry.backoff.ms (TopicPartitionWriter.java:158-171): a file
-        // whose rows fit in RetryBufferRows is buffered and the whole
-        // write retries on IOException (overwrite-create makes a partial
-        // file from a failed attempt harmless). A larger file streams
-        // straight through WITHOUT the in-task retry — the single-pass
-        // iterator can't be replayed, and buffering it would regress the
-        // writer from O(1) to O(file) heap — so its failures escalate
-        // directly to Spark's task retry, where the deterministic names +
-        // overwrite-create replay the whole partition idempotently.
-        val it2 = it.buffered
-        while (it2.hasNext) {
-          val path = it2.head.getString(0)
-          val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-          while (it2.hasNext && it2.head.getString(0) == path && buf.size < RetryBufferRows)
-            buf += it2.next()
-          if (it2.hasNext && it2.head.getString(0) == path) {
-            // oversized file: buffered prefix + rest of the stream, one pass
-            val rest = new Iterator[Row] {
-              def hasNext: Boolean = it2.hasNext && it2.head.getString(0) == path
-              def next(): Row = it2.next()
-            }
-            writeOnce(path, buf.iterator ++ rest)
-          } else {
-            graft.core.Retry.withBackoff(writeMaxAttempts, retryBackoffMs) {
-              writeOnce(path, buf.iterator)
+          fileRows.foreach { r =>
+            // null payloads (Kafka tombstones) are skipped, not written —
+            // one delete marker must not poison the whole micro-batch
+            if (!r.isNullAt(PayloadCol)) format match {
+              case j: JsonFormat =>
+                out.write(r.getUTF8String(PayloadCol).getBytes); out.write(j.lineSeparator)
+              case b: ByteArrayFormat =>
+                out.write(r.getBinary(PayloadCol)); out.write(b.separator)
+              case _: AvroFormat =>
+                val rec = toRow(r.getStruct(PayloadCol, structType.length)).asInstanceOf[Row]
+                avro.append(AvroSupport.toGenericRecord(rec, structType, avroSchema))
+              case _: ParquetFormat => ()
             }
           }
+        } finally {
+          if (avro != null) avro.close() else if (out != null) out.close() else raw.close()
         }
       }
-
-    // records = payload rows actually written (tombstones are skipped by
-    // the writer loop, so they must not inflate the metadata)
-    try collectResult(grouped, count(col("__payload"))) finally grouped.unpersist()
+      // One FILE is the retry unit, like the reference's record buffer +
+      // retry.backoff.ms (TopicPartitionWriter.java:158-171): a file
+      // whose rows fit in RetryBufferRows is buffered and the whole
+      // write retries on IOException (overwrite-create makes a partial
+      // file from a failed attempt harmless). A larger file streams
+      // straight through WITHOUT the in-task retry — the single-pass
+      // iterator can't be replayed, and buffering it would regress the
+      // writer from O(1) to O(file) heap — so its failures escalate
+      // directly to Spark's task retry, where the deterministic names +
+      // overwrite-create replay the whole partition idempotently.
+      (path: String, fileRows: Iterator[InternalRow]) => {
+        val buf = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+        while (buf.size < RetryBufferRows && fileRows.hasNext) buf += fileRows.next().copy()
+        if (fileRows.hasNext) writeOnce(path, buf.iterator ++ fileRows)
+        else Retry.withBackoff(attempts, backoffMs)(writeOnce(path, buf.iterator))
+      }
+    }
   }
 
-  /** Parquet path (F4/F5): Spark's vectorized parquet writer does the
-    * heavy lifting via a dynamic-partition write keyed by the target file,
-    * then each part file is renamed to its deterministic offset name —
-    * O(#files) driver-side metadata ops, no data movement through the
-    * driver. This replaces `AvroParquetWriter`
-    * (`ParquetAvroRecordWriterProvider.java:78-87`) with the engine-native
-    * columnar writer (row-group/page/codec via the usual
-    * `parquet.block.size` / `spark.sql.parquet.compression.codec` confs).
+  /** Parquet path (F4/F5): Spark's own parquet writer factory
+    * (`ParquetFileFormat.prepareWrite`, with the same `compression`
+    * option) writes each file under a hidden per-attempt temp name in its
+    * target directory, and the task renames it to its offset name. This
+    * replaces `AvroParquetWriter` (`ParquetAvroRecordWriterProvider.java:78-87`)
+    * with the engine-native columnar writer (row-group/page/codec via the
+    * usual `parquet.block.size` / `spark.sql.parquet.compression.codec`
+    * confs). Every row is a record: `records` counts null payload fields
+    * too.
     */
   def writeBatchParquet(
       df: DataFrame,
@@ -244,107 +188,129 @@ object OffsetNamedSink {
       payloadCols: Seq[String],
       extractor: TimestampExtractor = RecordTimestamp,
       extraGroupCols: Seq[Column] = Nil): BatchResult = {
+    val rows = prepare(df, cfg, partitioner, extractor, extraGroupCols, payloadCols.map(col))
+    val dataSchema = StructType(rows.schema.fields.drop(PayloadCol))
+    val options = Map("compression" -> format.codec)
+    val job = Job.getInstance(df.sparkSession.sessionState.newHadoopConfWithOptions(options))
+    val factory = new ParquetFileFormat().prepareWrite(df.sparkSession, job, options, dataSchema)
+    val conf = new SerializableConfiguration(job.getConfiguration)
+    val payloadRefs: Seq[Expression] = dataSchema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      BoundReference(PayloadCol + i, f.dataType, f.nullable)
+    }
+    val (attempts, backoffMs) = (cfg.writeMaxAttempts, cfg.retryBackoffMs)
+    land(rows, cfg, format.extension, countNulls = true) { () =>
+      val toPayload = UnsafeProjection.create(payloadRefs)
+      (path: String, fileRows: Iterator[InternalRow]) => {
+        val target = new Path(baseDir, path)
+        val tmp = new Path(target.getParent, s".${target.getName}.${java.util.UUID.randomUUID}.tmp")
+        val fs = target.getFileSystem(conf.value)
+        val writer = factory.newInstance(tmp.toString, dataSchema,
+          new TaskAttemptContextImpl(conf.value, new TaskAttemptID()))
+        try {
+          try fileRows.foreach(r => writer.write(toPayload(r))) finally writer.close()
+        } catch { case e: Throwable => fs.delete(tmp, false); throw e }
+        // D4: the rename is one object-store metadata RPC — retry
+        // transient failures with the same backoff as data writes. The
+        // body is IDEMPOTENT: if a prior attempt applied server-side
+        // before its response was lost (source gone, target present),
+        // it's recognized as success rather than deleting the
+        // just-committed target; and Hadoop rename signals failure by
+        // returning false, which must become an IOException or the retry
+        // (and the whole batch) would silently report success on a lost
+        // file. The temp file sits in the target's directory, so the
+        // directory already exists.
+        Retry.withBackoff(attempts, backoffMs) {
+          if (!(fs.exists(target) && !fs.exists(tmp))) {
+            if (fs.exists(target)) fs.delete(target, false)
+            if (!fs.rename(tmp, target))
+              throw new java.io.IOException(s"rename $tmp -> $target returned false")
+          }
+        }
+      }
+    }
+  }
 
-    val spark = df.sparkSession
-    // persisted for the same write-vs-metadata consistency reason as writeBatch
-    val grouped = withFileGroups(df, cfg, partitioner, extractor, format.extension, extraGroupCols)
-      .persist()
-    val tmp = new Path(baseDir, s".graft-tmp-${java.util.UUID.randomUUID}")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = tmp.getFileSystem(conf)
-    try {
-      // keep row order by offset via an internal alias so a payload column
-      // legitimately named "offset" survives into the output
-      grouped
-        .select((payloadCols.map(col) ++ Seq(
-          col("offset").as("__sortOffset"), col("__dir"), col("__fname"))): _*)
-        .repartition(col("__dir"), col("__fname"))
-        .sortWithinPartitions(col("__dir"), col("__fname"), col("__sortOffset"))
-        .drop("__sortOffset")
-        .write
-        .option("compression", format.codec)
-        .partitionBy("__dir", "__fname")
-        .mode("overwrite")
-        .parquet(tmp.toString)
+  /** The batch in the loop's column layout, shuffled once by writer key
+    * and sorted by offset within each key group. Input must carry `topic`
+    * (string), `partition` (int), `offset` (long), plus whatever the
+    * partitioner, extractor and payload reference.
+    */
+  private def prepare(
+      df: DataFrame,
+      cfg: PipelineConfig,
+      partitioner: Partitioner,
+      extractor: TimestampExtractor,
+      extraGroupCols: Seq[Column],
+      payload: Seq[Column]): DataFrame = {
+    val timeBucket =
+      if (cfg.rotateIntervalMs > 0)
+        floor(unix_millis(extractor.ts) / cfg.rotateIntervalMs).cast("long")
+      else lit(0L)
+    val key = Seq("__topic", "__partition", "__enc", "__tb", "__xg").map(col)
+    df.withColumn("__enc", partitioner.encodePartition)
+      .select(Seq(
+        col("topic").as("__topic"), col("partition").as("__partition"), col("__enc"),
+        timeBucket.as("__tb"),
+        (if (extraGroupCols.nonEmpty) concat_ws("", extraGroupCols: _*) else lit("")).as("__xg"),
+        concat_ws(cfg.dirDelim, lit(cfg.topicsDir), col("topic"), col("__enc")).as("__dir"),
+        concat(col("topic"), lit(cfg.fileDelim), col("partition").cast("string"),
+          lit(cfg.fileDelim)).as("__prefix"),
+        col("offset").as("__offset")) ++ payload: _*)
+      .repartition(key: _*)
+      .sortWithinPartitions(key :+ col("__offset"): _*)
+  }
 
-      // Rename part files to their deterministic names (D1). Partition dir
-      // names are Hive-escaped (%2F for '/', etc.) — unescape, then
-      // delete+rename (overwrite semantics, OSSStorage.java:78-90).
-      // Renames are metadata-only but one RPC each; with thousands of
-      // files per batch they run on a small thread pool (object stores
-      // serve concurrent metadata ops well — reference pools 2048 OSS
-      // connections, core-site.xml:22-25).
-      val dirs = fs.globStatus(new Path(tmp, "__dir=*/__fname=*"))
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(16, dirs.length)))
-      try {
-        val futures = dirs.toSeq.map { d =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            def call(): Unit = {
-              val fname = unescapePartitionValue(d.getPath.getName.stripPrefix("__fname="))
-              val rel = unescapePartitionValue(d.getPath.getParent.getName.stripPrefix("__dir="))
-              val parts = fs.listStatus(d.getPath).filter(_.getPath.getName.startsWith("part-"))
-              require(parts.length == 1,
-                s"expected 1 part file per group, got ${parts.length} in ${d.getPath}")
-              val target = new Path(new Path(baseDir, rel), fname)
-              val source = parts.head.getPath
-              // D4: each rename is one object-store metadata RPC — retry
-              // transient failures with the same backoff as data writes.
-              // The body is IDEMPOTENT: if a prior attempt applied
-              // server-side before its response was lost (source gone,
-              // target present), it's recognized as success rather than
-              // deleting the just-committed target; and Hadoop rename
-              // signals failure by returning false, which must become an
-              // IOException or the retry (and the whole batch) would
-              // silently report success on a lost file.
-              graft.core.Retry.withBackoff(cfg.writeMaxAttempts, cfg.retryBackoffMs) {
-                if (!(fs.exists(target) && !fs.exists(source))) {
-                  fs.mkdirs(target.getParent)
-                  if (fs.exists(target)) fs.delete(target, false)
-                  if (!fs.rename(source, target))
-                    throw new java.io.IOException(s"rename $source -> $target returned false")
-                }
-              }
-              ()
+  /** The one write job: per task, `openWriter` builds a [[FileWriter]];
+    * the loop walks each key group in offset order, hands it every
+    * `flushSize` rows as one file named by its first offset, and returns
+    * `(path, topic, partition, records, lo, hi)` per file, from which the
+    * driver builds the [[BatchResult]]. `countNulls` says whether a row
+    * with a null payload counts as a written record.
+    */
+  private def land(rows: DataFrame, cfg: PipelineConfig, extension: String, countNulls: Boolean)(
+      openWriter: () => FileWriter): BatchResult = {
+    val keyRefs: Seq[Expression] = rows.schema.fields.toSeq.take(KeyWidth).zipWithIndex.map {
+      case (f, i) => BoundReference(i, f.dataType, f.nullable)
+    }
+    val (flushSize, pad, dirDelim) = (cfg.flushSize, cfg.zeroPadWidth, cfg.dirDelim)
+    val qe = rows.queryExecution
+    // an SQL execution, as for any Dataset action: the tasks see the
+    // session's SQL confs (the parquet writer reads some of them there)
+    val files = SQLExecution.withNewExecutionId(qe, Some("graft-sink")) {
+      qe.toRdd.mapPartitions { it =>
+        val write = openWriter()
+        val keyOf = UnsafeProjection.create(keyRefs)
+        val in = it.buffered
+        Iterator.continually(in).takeWhile(_.hasNext).map { _ =>
+          val first = in.head
+          val key = keyOf(first).copy()
+          val topic = first.getUTF8String(0).toString
+          val partition = first.getInt(1)
+          val lo = first.getLong(OffsetCol)
+          // Spark's lpad: zero-pad to `pad` characters, truncate if longer
+          val start = lo.toString
+          val padded = if (start.length >= pad) start.take(pad) else "0" * (pad - start.length) + start
+          val path = first.getUTF8String(DirCol).toString + dirDelim +
+            first.getUTF8String(PrefixCol).toString + padded + extension
+          var (n, records, hi) = (0, 0L, lo)
+          write(path, new Iterator[InternalRow] {
+            def hasNext: Boolean = n < flushSize && in.hasNext && keyOf(in.head) == key
+            def next(): InternalRow = {
+              val r = in.next()
+              n += 1
+              hi = r.getLong(OffsetCol)
+              if (countNulls || !r.isNullAt(PayloadCol)) records += 1
+              r
             }
           })
+          (path, topic, partition, records, lo, hi)
         }
-        futures.foreach(_.get())
-      } finally pool.shutdown()
-    } finally {
-      fs.delete(tmp, true)
+      }.collect()
     }
-    try collectResult(grouped, count(lit(1))) finally grouped.unpersist()
-  }
-
-  /** Hive partition-path unescape (%XX sequences only — '+' stays '+'). */
-  private[sink] def unescapePartitionValue(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-        i += 3
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
-  /** O(#files) metadata: per-file counts + offset ranges + preCommit map.
-    * `recordCount` counts what the writer actually emits (non-null payloads
-    * for the byte writers; every row for parquet).
-    */
-  private def collectResult(grouped: DataFrame, recordCount: Column): BatchResult = {
-    val files = grouped
-      .groupBy("__path", "topic", "partition")
-      .agg(recordCount.as("n"), min("offset").as("lo"), max("offset").as("hi"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getLong(3), r.getLong(4), r.getLong(5)))
-    val committed = files.map { case (p, _, _, n, lo, hi) => CommittedFile(p, n, lo, hi) }
     val offsets = files
       .groupBy { case (_, t, pt, _, _, _) => (t, pt) }
       .map { case (k, fs) => k -> (fs.map(_._6).max + 1) } // offset + 1: TopicPartitionWriter.java:330
-    BatchResult(committed.toSeq.sortBy(_.path), offsets)
+    BatchResult(files.map { case (p, _, _, n, lo, hi) => CommittedFile(p, n, lo, hi) }.toSeq.sortBy(_.path),
+      offsets)
   }
 }

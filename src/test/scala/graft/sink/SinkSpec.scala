@@ -296,9 +296,4 @@ class SinkSpec extends SparkTestBase {
     assert(res.offsetsToCommit == Map(
       ("alpha", 0) -> 200L, ("beta", 0) -> 100L, ("beta", 1) -> 100L))
   }
-
-  test("unescapePartitionValue handles hive-escaped dirs, preserves '+'") {
-    assert(OffsetNamedSink.unescapePartitionValue("a%2Fb%3Dc") == "a/b=c")
-    assert(OffsetNamedSink.unescapePartitionValue("t+0+0000000001.json") == "t+0+0000000001.json")
-  }
 }

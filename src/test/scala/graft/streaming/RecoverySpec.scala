@@ -9,14 +9,16 @@ import org.apache.spark.sql.types._
 import graft.SparkTestBase
 import graft.core.PipelineConfig
 import graft.partition.DefaultPartitioner
-import graft.sink.JsonFormat
+import graft.sink.{JsonFormat, ParquetFormat}
+import graft.sources.LandedFiles
 
 /** D2/D3/D6 recovery: a file-source streaming query is stopped and
   * restarted against the same checkpoint; already-processed input is not
   * reprocessed, new input lands in new offset-named files, and nothing is
   * duplicated — the `testRecovery` analog (`TestDataWriterAvro.java:227-247`)
   * under Spark's checkpoint model. Also exercises declarative backpressure
-  * (`maxFilesPerTrigger`, the file-source analog of `maxOffsetsPerTrigger`).
+  * (`maxFilesPerTrigger`, the file-source analog of `maxOffsetsPerTrigger`),
+  * and a crash between the parquet file commit and the offset commit.
   */
 class RecoverySpec extends SparkTestBase {
 
@@ -67,5 +69,51 @@ class RecoverySpec extends SparkTestBase {
     assert(Files.readAllBytes(firstFile).toSeq == firstBytes)
     assert(Files.readAllLines(out.resolve(
       f"topics/r/partition=0/r+0+${100}%010d.json")).size == 50)
+  }
+
+  test("parquet: a crash after the files land but before the offset commit replays exactly once") {
+    val src = Files.createTempDirectory("graft-crash-src")
+    val out = Files.createTempDirectory("graft-crash-out")
+    val ckpt = Files.createTempDirectory("graft-crash-ckpt")
+    val cfg = PipelineConfig(flushSize = 40)
+    def stream() = spark.readStream.schema(recSchema)
+      .option("maxFilesPerTrigger", 1).parquet(src.toString)
+    def records(rel: String): Set[(Long, Long)] =
+      spark.read.parquet(out.resolve(rel).toString).collect()
+        .map(r => (r.getAs[Long]("offset"), r.getAs[Long]("a"))).toSet
+
+    writeSourceFile(src, 0, 100)
+    // batch 0 lands its files, then the batch fails: the checkpoint holds
+    // its offsets but no commit, so a restart must replay it
+    val crashing = stream().writeStream
+      .option("checkpointLocation", ckpt.toString)
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        ParityPipeline.writeMicroBatch(batch, cfg, DefaultPartitioner, ParquetFormat(),
+          out.toString, payload = lit(null))
+        throw new IllegalStateException("crash after the file commit")
+      }
+      .start()
+    try intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      crashing.processAllAvailable()) finally crashing.stop()
+
+    val landed = listFiles(out)
+    assert(landed == Seq(0, 40, 80).map(o => f"topics/r/partition=0/r+0+$o%010d.parquet"))
+    val landedRecords = landed.map(f => f -> records(f)).toMap
+    // a temp file a killed writer left behind, next to the real files
+    val leftover = out.resolve(f"topics/r/partition=0/.r+0+${0}%010d.parquet.dead-attempt.tmp")
+    Files.write(leftover, "torn parquet".getBytes("UTF-8"))
+    writeSourceFile(src, 100, 150)
+
+    val q = ParityPipeline.start(stream(), cfg, DefaultPartitioner, ParquetFormat(),
+      out.toString, ckpt.toString, payload = lit(null))
+    try q.processAllAvailable() finally q.stop()
+
+    val files = listFiles(out)
+    assert(files == Seq(0, 40, 80, 100, 140).map(o => f"topics/r/partition=0/r+0+$o%010d.parquet"))
+    landed.foreach(f => assert(records(f) == landedRecords(f), s"replay changed $f"))
+    val back = LandedFiles.readParquet(spark, out.toString)
+    val keys = back.select("_topic", "_kafka_partition", "offset").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
+    assert(keys.sorted == (0 until 150).map(o => ("r", 0, o.toLong)))
   }
 }
