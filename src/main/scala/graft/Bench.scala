@@ -408,7 +408,6 @@ object Bench {
         q -> BenchGate.flagVerdict(retimed.getOrElse(q, (None, None))._2,
           cur / best, normShift, calibStable,
           filesChangedOf.getOrElse(q, None), mainChangedOf.getOrElse(q, None))
-          .getOrElse("null")
       }
     println(BenchGate.stdoutLine(total, calibStart, calibEnd, calibStable,
       normShift, shiftSuspect, normRegs.size, secVetoed.size, flagVerdicts,

@@ -587,8 +587,17 @@ object BenchGate {
     * remaining budget (the entries a perf judge reads first); the
     * complete map still lands in SPARK_GRAFT_BENCH_OUT and the history
     * file.
+    *
+    * The tail is of raw stdout, so under sbt it also holds the line's
+    * `[info] ` prefix and newline and sbt's closing `[success] Total
+    * time: 783 s (13:03), completed Aug 18, 2026, 12:30:30 PM` line (74
+    * chars with its newline in BENCH_r16, whose line lost its head to
+    * them). [[SbtFramingChars]] reserves room for that framing with
+    * margin for longer durations and dates.
     */
-  val StdoutLineBudget = 2000
+  val StdoutTailChars = 2000
+  val SbtFramingChars = 200
+  val StdoutLineBudget = StdoutTailChars - SbtFramingChars
 
   /** Bench's 3-decimal seconds formatter — hoisted here so the stdout
     * line renderer and its spec share one definition.
@@ -619,14 +628,15 @@ object BenchGate {
   /** Renders the driver-facing stdout line (spec-pinned by
     * BenchStdoutSpec: json-parses, ≤ [[StdoutLineBudget]], full
     * registry names only). `flagVerdicts` is the worst-flags compact
-    * (name → verdict) adjudication summary — the per-flag norm/retime
-    * detail that used to live here moved file-only to buy room for the
-    * full names (it is in the SPARK_GRAFT_BENCH_OUT artifact verbatim).
+    * (name → verdict) adjudication summary, an absent verdict printed as
+    * JSON `null` — the per-flag norm/retime detail that used to live
+    * here moved file-only to buy room for the full names (it is in the
+    * SPARK_GRAFT_BENCH_OUT artifact verbatim).
     */
   def stdoutLine(total: Double, calibStart: Double, calibEnd: Double,
                  calibStable: Boolean, normShift: Double,
                  shiftSuspect: Boolean, nNormRegs: Int, nSecVetoed: Int,
-                 flagVerdicts: Seq[(String, String)],
+                 flagVerdicts: Seq[(String, Option[String])],
                  results: Map[String, Double],
                  out: String, sfDir: String): String = {
     def mapOf(entries: Seq[(String, String)]): String =
@@ -639,7 +649,7 @@ object BenchGate {
         s""""shift_suspect":$shiftSuspect,""" +
         s""""n_norm_regressions":$nNormRegs,"n_sec_vetoed":$nSecVetoed,""" +
         s""""flag_verdicts":${
-          mapOf(flagVerdicts.map { case (k, v) => k -> ("\"" + v + "\"") })},""" +
+          mapOf(flagVerdicts.map { case (k, v) => k -> v.fold("null")("\"" + _ + "\"") })},""" +
         s""""queries":"""
     val tail = s""","n_queries":${results.size},"full":"$out","sf":"$sfDir"}"""
     val entries = slowestWithinBudget(results,

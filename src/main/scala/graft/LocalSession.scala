@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE definition of the local session every main (Bench, Verify,
-  * Profile, ScaleSmoke) runs on. Each main used to carry its own copy of
-  * this builder block — which is exactly how a scaffold-era `local[4]`
-  * default survived a whole round in Bench/Verify while Profile already
-  * said 32: shared config must have one home.
+  * Profile, ScaleSmoke, SinkBench, ParityDemo) runs on. Each main used to
+  * carry its own copy of this builder block — which is exactly how a
+  * scaffold-era `local[4]` default survived a whole round in
+  * Bench/Verify while Profile already said 32: shared config must have
+  * one home.
   *
   * Parquet timestamp handling (both settings together make the engine
   * layout-agnostic across testdata generations):
@@ -19,6 +20,18 @@ import org.apache.spark.sql.SparkSession
   *     values are identical either way, but TimestampType keeps the whole
   *     function surface (unix_micros, session_window, …) and the output
   *     schema stable regardless of how the generator wrote the files.
+  *
+  * Streaming checkpoints go through Spark's `FileSystem`-based checkpoint
+  * file manager, not its `FileContext` default. Without the native Hadoop
+  * library, the `FileContext` manager's rename resolves symlinks by
+  * forking `readlink` (8 forks per checkpoint file) and sets permissions
+  * by forking `chmod`: a JFR recording of the parity sink counted 608
+  * `readlink` and 152 `chmod` forks on the stream thread over ~38
+  * micro-batches, ~42 ms of each offsets/commits log write. The
+  * `FileSystem` manager writes a temp file and moves it into place with
+  * one POSIX rename, which is atomic, so the offsets/commits logs keep
+  * their exactly-once guarantee; it is also the manager Spark falls back
+  * to on stores without a `FileContext` binding.
   */
 object LocalSession {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -38,6 +51,9 @@ object LocalSession {
   def stateStoreProvider: String = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE",
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
+  val CheckpointFileManager =
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+
   def apply(width: String = cpus): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$width]")
@@ -48,6 +64,7 @@ object LocalSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.streaming.stateStore.providerClass", stateStoreProvider)
+      .config("spark.sql.streaming.checkpointFileManagerClass", CheckpointFileManager)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // WindowExec logs "No Partition Defined" once per TASK for every

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.PipelineConfig
@@ -19,14 +18,7 @@ import graft.streaming.ParityPipeline
 object ParityDemo {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/graft-demo")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-parity-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("4")
     import spark.implicits._
 
     // 3 partitions × 5000 offsets, flush.size=2000 → files at 0/2000/4000

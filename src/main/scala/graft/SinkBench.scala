@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.PipelineConfig
@@ -22,13 +21,7 @@ object SinkBench {
   def main(args: Array[String]): Unit = {
     val records = sys.env.getOrElse("SPARK_GRAFT_SINK_RECORDS", "345678").toLong
     val parts = 3
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     // synthesize the FIXTURES base-record shape: boolean/int/long/float/double
     val df = spark.range(records * parts)

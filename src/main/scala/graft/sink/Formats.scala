@@ -168,11 +168,17 @@ object AvroSupport {
     case (other, _) => other
   }
 
-  /** Open an Avro container writer on `out` for `schema` with `codec`. */
-  def containerWriter(out: OutputStream, schema: ASchema, codec: CodecFactory): DataFileWriter[GenericRecord] = {
+  /** Open an Avro container writer on `out` for `schema` with `codec`.
+    * The 16-byte sync marker is the MD5 of `path` (the file's path
+    * relative to the sink's base directory) instead of Avro's random one,
+    * so a replayed file is byte-identical to the original.
+    */
+  def containerWriter(out: OutputStream, schema: ASchema, codec: CodecFactory,
+                      path: String): DataFileWriter[GenericRecord] = {
     val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
     w.setCodec(codec)
-    w.create(schema, out)
+    w.create(schema, out,
+      java.security.MessageDigest.getInstance("MD5").digest(path.getBytes("UTF-8")))
     w
   }
 

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Un
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.util.SerializableConfiguration
@@ -39,19 +40,26 @@ import graft.partition.{Partitioner, RecordTimestamp, TimestampExtractor}
   *   - D3 idempotent replay: names are pure functions of the data, files
   *     are overwrite-created (`OSSStorage.java:78-90`), so re-running a
   *     batch rewrites the same names holding the same records. The bytes
-  *     are identical too for json and bytes. An avro file starts from a
-  *     random sync marker, and parquet footers list each column chunk's
-  *     encodings in an order that can differ between JVMs (parquet-mr
-  *     keeps them in a hash set), so a replayed avro or parquet file may
-  *     differ from the original in those bytes.
+  *     are identical too for json, bytes and avro (an avro file's sync
+  *     marker is derived from its path). Parquet footers list each column
+  *     chunk's encodings in an order that can differ between JVMs
+  *     (parquet-mr keeps them in a hash set), so a replayed parquet file
+  *     may differ from the original in those bytes.
   *
   * Scale: the only shuffle is `repartition` on the writer key (topic,
   * partition, `__enc`, `__tb`, `__xg`), sorted by offset within
-  * partitions — one pass, so 1000 executors write 1000 key groups
-  * concurrently and the loop holds at most one file's rows (json, bytes
-  * and avro, up to [[RetryBufferRows]]) or none (parquet). The same job
-  * returns one manifest row per written file; nothing else reaches the
-  * driver.
+  * partitions. The loop holds at most one file's rows (json, bytes and
+  * avro, up to [[RetryBufferRows]]) or none (parquet), and returns one
+  * manifest row per written file; nothing else reaches the driver. The
+  * plan runs without adaptive execution ([[PlanBridge.nonAdaptive]]), as
+  * one job of two stages: the shuffle's map stage and the write stage.
+  * The write stage is `spark.sql.shuffle.partitions` wide, capped at the
+  * context's default parallelism, so up to that many key groups are
+  * written at once. Adaptive execution would split the plan into two jobs
+  * with a re-plan between them, and it sizes the write stage by shuffle
+  * bytes: a micro-batch of a few MB collapses to one task that writes
+  * every file in turn. Neither re-planning nor coalescing buys anything
+  * for a plan whose only exchange is this one.
   *
   * Works against any Hadoop FileSystem URI — `file:/` in tests, `oss://`
   * with hadoop-aliyun on the classpath (`OSSStorage.java:48-57` analog).
@@ -129,7 +137,7 @@ object OffsetNamedSink {
             case b: ByteArrayFormat => out = b.compression.wrap(raw)
             case a: AvroFormat =>
               if (avroSchema == null) avroSchema = AvroSupport.toAvroSchema(structType)
-              avro = AvroSupport.containerWriter(raw, avroSchema, a.codecFactory)
+              avro = AvroSupport.containerWriter(raw, avroSchema, a.codecFactory, path)
             case _: ParquetFormat => ()
           }
           fileRows.foreach { r =>
@@ -247,6 +255,9 @@ object OffsetNamedSink {
         floor(unix_millis(extractor.ts) / cfg.rotateIntervalMs).cast("long")
       else lit(0L)
     val key = Seq("__topic", "__partition", "__enc", "__tb", "__xg").map(col)
+    val spark = df.sparkSession
+    val width = math.min(spark.sessionState.conf.numShufflePartitions,
+      spark.sparkContext.defaultParallelism)
     df.withColumn("__enc", partitioner.encodePartition)
       .select(Seq(
         col("topic").as("__topic"), col("partition").as("__partition"), col("__enc"),
@@ -256,7 +267,7 @@ object OffsetNamedSink {
         concat(col("topic"), lit(cfg.fileDelim), col("partition").cast("string"),
           lit(cfg.fileDelim)).as("__prefix"),
         col("offset").as("__offset")) ++ payload: _*)
-      .repartition(key: _*)
+      .repartition(width, key: _*)
       .sortWithinPartitions(key :+ col("__offset"): _*)
   }
 
@@ -273,7 +284,7 @@ object OffsetNamedSink {
       case (f, i) => BoundReference(i, f.dataType, f.nullable)
     }
     val (flushSize, pad, dirDelim) = (cfg.flushSize, cfg.zeroPadWidth, cfg.dirDelim)
-    val qe = rows.queryExecution
+    val qe = PlanBridge.nonAdaptive(rows)
     // an SQL execution, as for any Dataset action: the tasks see the
     // session's SQL confs (the parquet writer reads some of them there)
     val files = SQLExecution.withNewExecutionId(qe, Some("graft-sink")) {

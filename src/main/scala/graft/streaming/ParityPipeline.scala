@@ -23,7 +23,7 @@ import graft.sink._
   *     (`OSSSinkTask.java:196-208`)
   *   - D3 idempotent replay → deterministic names + overwrite-create in
   *     [[OffsetNamedSink]]; a replayed epoch rewrites the same names with
-  *     the same records (byte-identical for json and bytes)
+  *     the same records (byte-identical for json, bytes and avro)
   *   - D4 retries → `spark.task.maxFailures` + query restart policy
   *   - D5 backpressure → `maxOffsetsPerTrigger` (declarative pause/resume)
   *   - D6 rebalance → Kafka source + checkpoint recovery, no code

@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * The fix prints FULL registry names for the slowest queries that fit
   * the ~2 kB stdout tail the driver records. This spec pins the
   * contract mechanically: the exact printed line must json-parse, stay
-  * within the tail budget, and carry full registry-matching names —
+  * within the tail budget together with sbt's `[info] ` prefix and
+  * closing `[success] Total time: …` line, and carry full
+  * registry-matching names —
   * under realistic AND pathological (every query at the 3600 s failure
   * penalty) value widths.
   */
@@ -22,8 +24,16 @@ class BenchStdoutSpec extends AnyFunSuite {
     registryNames.map(n => n -> (0.5 + rnd.nextDouble() * 29.5)).toMap
   }
 
+  /** sbt's closing line at its widest: a five-digit duration past a day
+    * and the longest medium-format date. */
+  private val sbtTrailer =
+    "[success] Total time: 99999 s (1 day, 03:46:39), completed Sep 30, 2026, 12:59:59 PM"
+
+  /** The line as the recorded tail of raw stdout holds it under sbt. */
+  private def framed(l: String): String = "[info] " + l + "\n" + sbtTrailer + "\n"
+
   private def line(results: Map[String, Double],
-                   verdicts: Seq[(String, String)] = Nil): String =
+                   verdicts: Seq[(String, Option[String])] = Nil): String =
     BenchGate.stdoutLine(
       total = results.values.sum, calibStart = 0.525, calibEnd = 0.191,
       calibStable = false, normShift = 0.98, shiftSuspect = false,
@@ -37,12 +47,17 @@ class BenchStdoutSpec extends AnyFunSuite {
   test("stdout line json-parses, fits the tail budget, and carries full registry names") {
     val results = syntheticTimes(42)
     val l = line(results,
-      Seq("q100_contamination_by_suite" -> "ghost",
-        "q11_join_range" -> "drift_consistent",
-        "q98_boilerplate_strip" -> "null"))
+      Seq("q100_contamination_by_suite" -> Some("ghost"),
+        "q11_join_range" -> Some("drift_consistent"),
+        "q98_boilerplate_strip" -> None))
     assert(l.length <= BenchGate.StdoutLineBudget,
       s"line is ${l.length} chars — past the driver's recorded tail")
+    assert(framed(l).length <= BenchGate.StdoutTailChars,
+      s"framed line is ${framed(l).length} chars — its head falls out of the recorded tail")
     val node = parse(l) // throws on malformed JSON
+    // an absent verdict is JSON null, not the string "null"
+    assert(node.get("flag_verdicts").get("q98_boilerplate_strip").isNull)
+    assert(node.get("flag_verdicts").get("q100_contamination_by_suite").asText == "ghost")
     assert(node.get("metric").asText == "total")
     assert(node.get("n_queries").asInt == registryNames.size)
     assert(math.abs(node.get("value").asDouble - results.values.sum) < 0.01)
@@ -80,8 +95,10 @@ class BenchStdoutSpec extends AnyFunSuite {
 
   test("pathological run (every query at the 3600 s penalty) still fits and parses") {
     val results = registryNames.map(_ -> 3600.0).toMap
-    val l = line(results, Seq.fill(3)("q100_contamination_by_suite" -> "drift_consistent"))
+    val l = line(results, Seq.fill(3)("q100_contamination_by_suite" -> Some("drift_consistent")))
     assert(l.length <= BenchGate.StdoutLineBudget, s"line is ${l.length} chars")
+    assert(framed(l).length <= BenchGate.StdoutTailChars,
+      s"framed line is ${framed(l).length} chars")
     val node = parse(l)
     assert(node.get("queries").size() >= 25,
       s"only ${node.get("queries").size()} entries at worst-case value width")

@@ -1,13 +1,17 @@
 package graft.sink
 
 import java.nio.file.{Files, Path => JPath, Paths}
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 import graft.core.PipelineConfig
 import graft.partition._
+import graft.streaming.ParityPipeline
 
 /** Parity-sink round-trips mirroring the reference's integration pattern
   * (SURVEY.md §5): drive records through the sink, read the committed
@@ -19,6 +23,64 @@ import graft.partition._
 class SinkSpec extends SparkTestBase {
 
   private def tmpDir(): JPath = Files.createTempDirectory("graft-sink")
+
+  /** `landing`'s result, the Spark jobs it runs, and how many of its
+    * tasks read shuffled rows (its non-empty write tasks). A marker job
+    * submitted after it from this thread reaches the listener after all
+    * of its events.
+    */
+  private def executionShape[A](landing: => A): (A, Int, Int) = {
+    val sc = spark.sparkContext
+    val phase = "graft.test.phase"
+    val (jobs, writers) = (new AtomicInteger, new AtomicInteger)
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(phase)).orNull match {
+          case "landing" => jobs.incrementAndGet(); e.stageIds.foreach(stages.add)
+          case "marker" => drained.countDown()
+          case _ => ()
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null &&
+            e.taskMetrics.shuffleReadMetrics.recordsRead > 0) writers.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(phase, "landing")
+      val result = landing
+      sc.setLocalProperty(phase, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(30, TimeUnit.SECONDS), "listener never saw the marker job")
+      (result, jobs.get, writers.get)
+    } finally {
+      sc.setLocalProperty(phase, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a micro-batch lands as one job whose write stage runs key groups in parallel") {
+    val cfg = PipelineConfig(flushSize = 20)
+    // 10 Kafka partitions: 10 writer-key groups, 3 files each
+    val df = kafkaRecords("shape", nParts = 10, perPart = 50)
+    val adaptive = spark.conf.get("spark.sql.adaptive.enabled")
+    Seq[(OutputFormat, org.apache.spark.sql.Column, String)](
+      (ParquetFormat(), lit(null), ".parquet"),
+      (JsonFormat(), to_json(struct(col("a"), col("b"))), ".json")).foreach {
+      case (format, payload, ext) =>
+        val (res, jobs, writers) = executionShape {
+          ParityPipeline.writeMicroBatch(df, cfg, DefaultPartitioner, format,
+            tmpDir().toString, payload)
+        }
+        assert(jobs == 1 && writers > 1,
+          s"$ext: $jobs job(s) and $writers non-empty write task(s) for 10 key groups")
+        assert(res.files.size == 30 && res.files.forall(_.path.endsWith(ext)))
+        assert(res.offsetsToCommit == (0 until 10).map(p => ("shape", p) -> 50L).toMap)
+    }
+    // per plan: the shared session's adaptive setting is never touched
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == adaptive)
+  }
 
   test("json: flush.size rotation, offset-exact names, per-file counts") {
     val base = tmpDir()
@@ -106,6 +168,22 @@ class SinkSpec extends SparkTestBase {
     assert(recs.head.get("a") == 0L)
     assert(recs.head.get("b").toString == "v0")
     reader.close()
+  }
+
+  test("avro: replay writes byte-identical files (sync marker from the file path)") {
+    val cfg = PipelineConfig(flushSize = 15)
+    val df = kafkaRecords("ar", nParts = 2, perPart = 40)
+    def land(): Map[String, Seq[Byte]] = {
+      val base = tmpDir()
+      OffsetNamedSink.writeBatch(
+        df, cfg, DefaultPartitioner, AvroFormat("deflate"), base.toString,
+        payload = struct(col("a"), col("b")))
+      listFiles(base).map(f => f -> Files.readAllBytes(base.resolve(f)).toSeq).toMap
+    }
+    val (first, second) = (land(), land())
+    assert(first.size == 6 && second.keySet == first.keySet)
+    val changed = first.keys.filter(f => second(f) != first(f))
+    assert(changed.isEmpty, s"replay changed the bytes of $changed")
   }
 
   test("avro: snappy codec (reference default test matrix) round-trips") {

@@ -18,7 +18,9 @@ import graft.sources.LandedFiles
   * duplicated — the `testRecovery` analog (`TestDataWriterAvro.java:227-247`)
   * under Spark's checkpoint model. Also exercises declarative backpressure
   * (`maxFilesPerTrigger`, the file-source analog of `maxOffsetsPerTrigger`),
-  * and a crash between the parquet file commit and the offset commit.
+  * and a crash between the file commit and the offset commit, for parquet
+  * and for json (the latter on the `FileSystem`-based checkpoint manager
+  * `graft.LocalSession` configures).
   */
 class RecoverySpec extends SparkTestBase {
 
@@ -115,5 +117,47 @@ class RecoverySpec extends SparkTestBase {
     val keys = back.select("_topic", "_kafka_partition", "offset").collect()
       .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
     assert(keys.sorted == (0 until 150).map(o => ("r", 0, o.toLong)))
+  }
+
+  test("json: a crash before the offset commit replays identical files, on the FileSystem checkpoint manager") {
+    val src = Files.createTempDirectory("graft-jcrash-src")
+    val out = Files.createTempDirectory("graft-jcrash-out")
+    val ckpt = Files.createTempDirectory("graft-jcrash-ckpt")
+    val cfg = PipelineConfig(flushSize = 40)
+    val payload = to_json(struct(col("offset"), col("a")))
+    def stream() = spark.readStream.schema(recSchema)
+      .option("maxFilesPerTrigger", 1).parquet(src.toString)
+    def bytes(rel: String): Seq[Byte] = Files.readAllBytes(out.resolve(rel)).toSeq
+    val managerKey = "spark.sql.streaming.checkpointFileManagerClass"
+    spark.conf.set(managerKey, graft.LocalSession.CheckpointFileManager)
+    try {
+      writeSourceFile(src, 0, 100)
+      val crashing = stream().writeStream
+        .option("checkpointLocation", ckpt.toString)
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          ParityPipeline.writeMicroBatch(batch, cfg, DefaultPartitioner, JsonFormat(),
+            out.toString, payload)
+          throw new IllegalStateException("crash after the file commit")
+        }
+        .start()
+      try intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        crashing.processAllAvailable()) finally crashing.stop()
+
+      val landed = listFiles(out)
+      assert(landed == Seq(0, 40, 80).map(o => f"topics/r/partition=0/r+0+$o%010d.json"))
+      val landedBytes = landed.map(f => f -> bytes(f)).toMap
+      writeSourceFile(src, 100, 150)
+
+      val q = ParityPipeline.start(stream(), cfg, DefaultPartitioner, JsonFormat(),
+        out.toString, ckpt.toString, payload)
+      try q.processAllAvailable() finally q.stop()
+
+      val files = listFiles(out)
+      assert(files == Seq(0, 40, 80, 100, 140).map(o => f"topics/r/partition=0/r+0+$o%010d.json"))
+      landed.foreach(f => assert(bytes(f) == landedBytes(f), s"replay changed the bytes of $f"))
+      // every offset lands exactly once, in order, with its own record
+      val lines = files.flatMap(f => Files.readAllLines(out.resolve(f)).asScala)
+      assert(lines == (0 until 150).map(o => s"""{"offset":$o,"a":${o * 2}}"""))
+    } finally spark.conf.unset(managerKey)
   }
 }
