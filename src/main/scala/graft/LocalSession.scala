@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE definition of the local session every main (Bench, Verify,
-  * Profile, ScaleSmoke, SinkBench, ParityDemo) runs on. Each main used to
+  * Profile, ScaleSmoke, SinkBench, ParityDemo, PlanAudit, ExplainFmt)
+  * and the test suites (`SparkTestBase`) run on. Each main used to
   * carry its own copy of this builder block — which is exactly how a
   * scaffold-era `local[4]` default survived a whole round in
   * Bench/Verify while Profile already said 32: shared config must have
@@ -32,6 +33,28 @@ import org.apache.spark.sql.SparkSession
   * one POSIX rename, which is atomic, so the offsets/commits logs keep
   * their exactly-once guarantee; it is also the manager Spark falls back
   * to on stores without a `FileContext` binding.
+  *
+  * Plan descriptions are capped at 1m characters
+  * (`spark.sql.maxPlanStringLength`). Spark builds a description of the
+  * physical plan for every SQL execution it starts
+  * (`QueryExecution.explainString`, called from
+  * `SQLExecution.withNewExecutionId`), and by default it keeps the whole
+  * string. Under `persist` materialization an `InMemoryRelation` prints
+  * its cached plan as an inner child, and that plan prints the cached
+  * plans it reads, so the description doubles with every persisted round
+  * of a fixpoint (see the persist caveat in `graft.core.Materialize`).
+  * For q108's crossing repair Spark's truncation warnings logged 13M,
+  * 111M, 531M and 1.1G characters and then 2,147,483,632 (the int
+  * ceiling), and the JVM died with `OutOfMemoryError: Java heap space`
+  * in `StringConcat.toString`, although the repair's entry plan has
+  * only 8,225 analyzed nodes. Spark's own doc for this conf says to
+  * lower it when plan strings take up too much memory or cause
+  * OutOfMemory errors. The cap is 1m, not Spark's example of 8k:
+  * `ExplainFmt`, `ExplainOne` and `PlanAudit` print plans through this
+  * session, the committed dumps under `plans/` are checked against
+  * those files, and the largest of them
+  * (`plans/r15/q168_containment_sketch_audit_before.txt`) is 32,309
+  * characters, which 1m keeps whole.
   */
 object LocalSession {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -65,6 +88,7 @@ object LocalSession {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.streaming.stateStore.providerClass", stateStoreProvider)
       .config("spark.sql.streaming.checkpointFileManagerClass", CheckpointFileManager)
+      .config("spark.sql.maxPlanStringLength", "1m")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // WindowExec logs "No Partition Defined" once per TASK for every

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints `explain("formatted")` for selected queries — the plan-quality
   * feedback loop: verify filters reach the scan (`PushedFilters`), columns
   * are pruned (`ReadSchema`), small dims broadcast, and operators sit
@@ -12,14 +10,7 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession("4")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val names =

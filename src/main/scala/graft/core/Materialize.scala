@@ -39,7 +39,17 @@ import org.apache.spark.storage.StorageLevel
   *     parquet round trip for exactly this reason). Since round 13 the
   *     fixpoint entries enforce this mechanically via
   *     [[requireIterationSafe]] — the loud require replaced the
-  *     scaladoc-only contract.
+  *     scaladoc-only contract. A second cost of the same nesting is the
+  *     plan DESCRIPTION Spark builds for every SQL execution: a
+  *     persisted table is an `InMemoryRelation`, which prints its whole
+  *     cached plan inside every plan that reads it, and that cached plan
+  *     prints the cached plans it reads, so descriptions double per
+  *     persisted round (q108's crossing repair reached the int ceiling
+  *     of characters and ran the JVM out of heap while its analyzed
+  *     plan stayed at 8,225 nodes). `graft.LocalSession` caps what Spark
+  *     keeps of a description (`spark.sql.maxPlanStringLength`), but
+  *     Spark still walks the whole description, which is why
+  *     DedupGraphSpec's q108 persist pin takes ~230 s.
   *
   * All three modes compute the materialized table EXACTLY once — the
   * property the call sites actually require (q27's capped shingle set feeds

@@ -3,17 +3,12 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for all suites (guide: one per suite, lazy). */
+/** One shared local session for all suites (guide: one per suite, lazy):
+  * `LocalSession`'s, at width 4, so the specs run on the session the mains
+  * run on.
+  */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession("4")
 
   def sf(name: String): String = s"/root/testdata/$name"
 

@@ -128,36 +128,34 @@ class RecoverySpec extends SparkTestBase {
     def stream() = spark.readStream.schema(recSchema)
       .option("maxFilesPerTrigger", 1).parquet(src.toString)
     def bytes(rel: String): Seq[Byte] = Files.readAllBytes(out.resolve(rel)).toSeq
-    val managerKey = "spark.sql.streaming.checkpointFileManagerClass"
-    spark.conf.set(managerKey, graft.LocalSession.CheckpointFileManager)
-    try {
-      writeSourceFile(src, 0, 100)
-      val crashing = stream().writeStream
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          ParityPipeline.writeMicroBatch(batch, cfg, DefaultPartitioner, JsonFormat(),
-            out.toString, payload)
-          throw new IllegalStateException("crash after the file commit")
-        }
-        .start()
-      try intercept[org.apache.spark.sql.streaming.StreamingQueryException](
-        crashing.processAllAvailable()) finally crashing.stop()
+    assert(spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") ==
+      graft.LocalSession.CheckpointFileManager)
+    writeSourceFile(src, 0, 100)
+    val crashing = stream().writeStream
+      .option("checkpointLocation", ckpt.toString)
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        ParityPipeline.writeMicroBatch(batch, cfg, DefaultPartitioner, JsonFormat(),
+          out.toString, payload)
+        throw new IllegalStateException("crash after the file commit")
+      }
+      .start()
+    try intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      crashing.processAllAvailable()) finally crashing.stop()
 
-      val landed = listFiles(out)
-      assert(landed == Seq(0, 40, 80).map(o => f"topics/r/partition=0/r+0+$o%010d.json"))
-      val landedBytes = landed.map(f => f -> bytes(f)).toMap
-      writeSourceFile(src, 100, 150)
+    val landed = listFiles(out)
+    assert(landed == Seq(0, 40, 80).map(o => f"topics/r/partition=0/r+0+$o%010d.json"))
+    val landedBytes = landed.map(f => f -> bytes(f)).toMap
+    writeSourceFile(src, 100, 150)
 
-      val q = ParityPipeline.start(stream(), cfg, DefaultPartitioner, JsonFormat(),
-        out.toString, ckpt.toString, payload)
-      try q.processAllAvailable() finally q.stop()
+    val q = ParityPipeline.start(stream(), cfg, DefaultPartitioner, JsonFormat(),
+      out.toString, ckpt.toString, payload)
+    try q.processAllAvailable() finally q.stop()
 
-      val files = listFiles(out)
-      assert(files == Seq(0, 40, 80, 100, 140).map(o => f"topics/r/partition=0/r+0+$o%010d.json"))
-      landed.foreach(f => assert(bytes(f) == landedBytes(f), s"replay changed the bytes of $f"))
-      // every offset lands exactly once, in order, with its own record
-      val lines = files.flatMap(f => Files.readAllLines(out.resolve(f)).asScala)
-      assert(lines == (0 until 150).map(o => s"""{"offset":$o,"a":${o * 2}}"""))
-    } finally spark.conf.unset(managerKey)
+    val files = listFiles(out)
+    assert(files == Seq(0, 40, 80, 100, 140).map(o => f"topics/r/partition=0/r+0+$o%010d.json"))
+    landed.foreach(f => assert(bytes(f) == landedBytes(f), s"replay changed the bytes of $f"))
+    // every offset lands exactly once, in order, with its own record
+    val lines = files.flatMap(f => Files.readAllLines(out.resolve(f)).asScala)
+    assert(lines == (0 until 150).map(o => s"""{"offset":$o,"a":${o * 2}}"""))
   }
 }

@@ -109,30 +109,28 @@ class StatefulOpsSpec extends SparkTestBase {
   test("streamingNearDup state survives micro-batches under the RocksDB provider (LocalSession default)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set(key, graft.LocalSession.stateStoreProvider)
+    assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass") ==
+      graft.LocalSession.stateStoreProvider)
+    assert(graft.LocalSession.stateStoreProvider.contains("RocksDB"))
+    val base = (1 to 64).map(i => (i * 131L) % 1009L)
+    val stream = MemoryStream[SketchedDoc]
+    val q = streamingNearDup(stream.toDS(), minSim = 0.9)
+      .writeStream.outputMode("append")
+      .format("memory").queryName("near_dup_rocks")
+      .trigger(Trigger.ProcessingTime(0L)).start()
     try {
-      assert(graft.LocalSession.stateStoreProvider.contains("RocksDB"))
-      val base = (1 to 64).map(i => (i * 131L) % 1009L)
-      val stream = MemoryStream[SketchedDoc]
-      val q = streamingNearDup(stream.toDS(), minSim = 0.9)
-        .writeStream.outputMode("append")
-        .format("memory").queryName("near_dup_rocks")
-        .trigger(Trigger.ProcessingTime(0L)).start()
-      try {
-        stream.addData(SketchedDoc(1L, base))
-        q.processAllAvailable()
-        // second batch reads batch-1 state back from RocksDB
-        stream.addData(SketchedDoc(2L, base.updated(0, 999999L)))
-        q.processAllAvailable()
-        val hits = spark.table("near_dup_rocks").collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-        assert(hits == Set((2L, 1L, 63.0 / 64)))
-        // the running query really is on RocksDB, not the HDFS default
-        assert(q.lastProgress.stateOperators.head.customMetrics
-          .containsKey("rocksdbFilesCopied"), "query not using RocksDB state store")
-      } finally q.stop()
-    } finally spark.conf.unset(key)
+      stream.addData(SketchedDoc(1L, base))
+      q.processAllAvailable()
+      // second batch reads batch-1 state back from RocksDB
+      stream.addData(SketchedDoc(2L, base.updated(0, 999999L)))
+      q.processAllAvailable()
+      val hits = spark.table("near_dup_rocks").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(hits == Set((2L, 1L, 63.0 / 64)))
+      // the running query really is on RocksDB, not the HDFS default
+      assert(q.lastProgress.stateOperators.head.customMetrics
+        .containsKey("rocksdbFilesCopied"), "query not using RocksDB state store")
+    } finally q.stop()
   }
 
   test("streamingSessionize matches q37's batch sessions once the watermark closes them") {
