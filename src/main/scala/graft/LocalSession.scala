@@ -39,15 +39,8 @@ import org.apache.spark.sql.SparkSession
   * physical plan for every SQL execution it starts
   * (`QueryExecution.explainString`, called from
   * `SQLExecution.withNewExecutionId`), and by default it keeps the whole
-  * string. Under `persist` materialization an `InMemoryRelation` prints
-  * its cached plan as an inner child, and that plan prints the cached
-  * plans it reads, so the description doubles with every persisted round
-  * of a fixpoint (see the persist caveat in `graft.core.Materialize`).
-  * For q108's crossing repair Spark's truncation warnings logged 13M,
-  * 111M, 531M and 1.1G characters and then 2,147,483,632 (the int
-  * ceiling), and the JVM died with `OutOfMemoryError: Java heap space`
-  * in `StringConcat.toString`, although the repair's entry plan has
-  * only 8,225 analyzed nodes. Spark's own doc for this conf says to
+  * string: the driver holds one full copy per job, however large the
+  * plan. The cap bounds that memory for any description. Spark's own doc for this conf says to
   * lower it when plan strings take up too much memory or cause
   * OutOfMemory errors. The cap is 1m, not Spark's example of 8k:
   * `ExplainFmt`, `ExplainOne` and `PlanAudit` print plans through this

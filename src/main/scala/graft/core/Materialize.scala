@@ -1,13 +1,13 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /** The ONE materialization point for intermediate tables that feed multiple
   * plan consumers (both sides of a candidate self-join, a sketch table read
-  * three times). Every near-dup operator calls [[Materialize.apply]] instead
-  * of hard-coding `localCheckpoint()` so the strategy is a deployment choice,
-  * not a code change.
+  * three times) and for the per-round lineage cut of the iterative
+  * operators (the CC / k-core fixpoints). Every caller goes through
+  * [[Materialize.apply]] instead of hard-coding `localCheckpoint()` so the
+  * strategy is a deployment choice, not a code change.
   *
   * Failure-tolerance contract (set `spark.graft.materialize.mode`):
   *
@@ -22,131 +22,25 @@ import org.apache.spark.storage.StorageLevel
   *     directory (`SparkContext.setCheckpointDir`, typically HDFS/object
   *     store). Survives executor AND node loss; the right mode for a
   *     multi-hour 100 TB dedup job where one lost node must not kill the
-  *     run. Costs one distributed write + read of the sketch table.
-  *   - `persist`: `persist(MEMORY_AND_DISK_2)` — lazy, 2× replicated
-  *     blocks; survives single-executor loss (the replica serves reads and
-  *     recompute-from-lineage covers double loss). Middle ground: no
-  *     checkpoint-dir round trip, but entries pin the CacheManager until
-  *     the session drops them. CAVEAT (measured, round 12): persist does
-  *     NOT truncate lineage, so iterative callers (the CC/k-core
-  *     fixpoints, whose per-round Materialize exists precisely as a
-  *     lineage cut) only stay analyzable under this mode when their
-  *     INPUTS are storage-backed — which is why every store fixture here
-  *     is a parquet directory, never a live plan handed across the store
-  *     boundary. Feeding a fixpoint a lazy upstream plan chain under
-  *     persist nests each round's full history and OOMs the analyzer
-  *     (DedupGraphSpec's persist pin builds its store state through a
-  *     parquet round trip for exactly this reason). Since round 13 the
-  *     fixpoint entries enforce this mechanically via
-  *     [[requireIterationSafe]] — the loud require replaced the
-  *     scaladoc-only contract. A second cost of the same nesting is the
-  *     plan DESCRIPTION Spark builds for every SQL execution: a
-  *     persisted table is an `InMemoryRelation`, which prints its whole
-  *     cached plan inside every plan that reads it, and that cached plan
-  *     prints the cached plans it reads, so descriptions double per
-  *     persisted round (q108's crossing repair reached the int ceiling
-  *     of characters and ran the JVM out of heap while its analyzed
-  *     plan stayed at 8,225 nodes). `graft.LocalSession` caps what Spark
-  *     keeps of a description (`spark.sql.maxPlanStringLength`), but
-  *     Spark still walks the whole description, which is why
-  *     DedupGraphSpec's q108 persist pin takes ~230 s.
+  *     run. Costs one distributed write + read of the sketch table, and
+  *     the checkpoint may execute the plan twice (see the EQUALITY-ONLY
+  *     note in `DedupGraph.ccFixpoint`).
   *
-  * All three modes compute the materialized table EXACTLY once — the
-  * property the call sites actually require (q27's capped shingle set feeds
-  * three consumers; recomputing a MinHash sketch per consumer doubles the
-  * dominant aggregation).
+  * Both modes are eager and cut lineage: the plan has run when [[apply]]
+  * returns (so an `observe()` planted on it is fulfilled), and every
+  * downstream consumer reads the materialized blocks instead of
+  * recomputing it (q27's capped shingle set feeds three consumers;
+  * recomputing a MinHash sketch per consumer doubles the dominant
+  * aggregation).
   */
 object Materialize {
   val ModeKey = "spark.graft.materialize.mode"
 
-  /** ONE mode table drives both [[apply]] and [[isEager]] (round-15
-    * ADVICE): isEager used to re-encode the dispatch as an independent
-    * `!= "persist"` comparison, so a future fourth mode added to apply's
-    * match alone would silently classify as eager — reintroducing the
-    * `Observation.get` deadlock isEager exists to prevent. A new mode now
-    * MUST declare its eagerness here or every path throws the same
-    * unknown-mode error.
-    */
-  private val modes: Map[String, (Boolean, DataFrame => DataFrame)] = Map(
-    "local"    -> (true,  (df: DataFrame) => df.localCheckpoint()),
-    "reliable" -> (true,  (df: DataFrame) => df.checkpoint()),
-    "persist"  -> (false, (df: DataFrame) =>
-      df.persist(StorageLevel.MEMORY_AND_DISK_2)))
-
-  private def mode(df: DataFrame): (Boolean, DataFrame => DataFrame) = {
-    val m = df.sparkSession.conf.get(ModeKey, "local")
-    modes.getOrElse(m, throw new IllegalArgumentException(
-      s"$ModeKey must be ${modes.keys.toSeq.sorted.mkString("|")}, got '$m'"))
-  }
-
-  def apply(df: DataFrame): DataFrame = mode(df)._2(df)
-
-  /** Whether [[apply]] runs the plan NOW (localCheckpoint / checkpoint are
-    * eager actions; persist is lazy). Iterative callers that fuse their
-    * convergence aggregate into the materialize job via `observe()` must
-    * check this: under the lazy mode no job has run yet, so an
-    * `Observation.get` would block forever — those callers fall back to an
-    * explicit aggregate action (which computes the observed metrics as a
-    * side effect of the same plan, so the Observation is fulfilled either
-    * way, just never the thing being waited on).
-    */
-  def isEager(df: DataFrame): Boolean = mode(df)._1
-
-  /** Per-input plan-size bound for [[requireIterationSafe]] under persist
-    * mode. Default 32768, set from two MEASURED anchors: (a) the largest
-    * legitimate entry plan in the engine — q108's repair feeds the delta
-    * solve a contracted edge plan of 8,225 analyzed nodes under persist
-    * (the repair's own inner CC output composes into it; bounded by code
-    * structure plus the fixture's repair rounds, and proven analyzable by
-    * the DedupGraphSpec persist pin, which doubles as this guard's
-    * false-positive control); (b) the hazard class — a fixpoint nests its
-    * entry plan ~4× per round, so an entry plan of ~100 k+ nodes (a live
-    * previous-fixpoint output fed back across the store boundary, the
-    * round-12 OOM) reaches analyzer-killing millions within a few rounds.
-    * 32768 sits 4× above the measured legitimate maximum and 4× below
-    * the measured failure class.
-    */
-  val PersistMaxPlanNodesKey = "spark.graft.materialize.persistMaxPlanNodes"
-
-  /** Mechanical enforcement of the persist-mode caveat above (round-12
-    * verdict item 4): iterative callers (the CC / k-core fixpoints) nest
-    * their input plan into EVERY round's lineage, and `persist` — the one
-    * mode that never truncates lineage — turns a large live upstream plan
-    * into multiplicative per-round growth that OOMs the ANALYZER: a
-    * silent runtime cliff, previously documented only in scaladoc. Under
-    * persist mode this guard requires the input to be storage-backed in
-    * the operative sense — an analyzed plan of bounded node count — and
-    * fails loudly with the remedy otherwise. "Storage-backed" is a SIZE
-    * contract, not a literal scan-root demand: the engine's own operators
-    * legitimately compose live plans over landed bases into the fixpoints
-    * (q108's repair measures 8,225 nodes at entry and is correct and
-    * analyzable); what the analyzer cannot survive is the
-    * unbounded-feedback class — a previous fixpoint's LIVE output fed
-    * back in, whose plan the next fixpoint multiplies ~4× per round.
-    * Other modes are a no-op (localCheckpoint/checkpoint cut lineage
-    * each round; the hazard does not exist). Counting the input's
-    * analyzed nodes ONCE is itself safe and cheap — it is the per-round
-    * nesting of that plan, not one analysis pass over it, that explodes.
-    */
-  def requireIterationSafe(df: DataFrame, what: String): Unit =
-    if (df.sparkSession.conf.get(ModeKey, "local") == "persist") {
-      val maxNodes =
-        df.sparkSession.conf.get(PersistMaxPlanNodesKey, "32768").toInt
-      // count SUBQUERY plans too (round-13 ADVICE): LogicalPlan.collect
-      // walks only the main tree, so an unbounded-feedback input routed
-      // through an IN/EXISTS/scalar subquery would evade a main-tree-only
-      // bound — subqueriesAll recurses into nested subqueries, and each
-      // returned plan is a distinct tree, so summing per-tree node counts
-      // counts every logical node exactly once
-      val analyzed = df.queryExecution.analyzed
-      val n = (analyzed +: analyzed.subqueriesAll)
-        .map(_.collect { case p => p }.size).sum
-      require(n <= maxNodes,
-        s"$what: input plan has $n logical nodes (bound $maxNodes) under " +
-          s"$ModeKey=persist, which never truncates lineage — an iterative " +
-          "fixpoint would nest this plan into every round and OOM the " +
-          "analyzer. Land the input first (parquet/table round trip) or " +
-          "run under materialize mode local/reliable. See the persist " +
-          "caveat in Materialize's scaladoc.")
+  def apply(df: DataFrame): DataFrame =
+    df.sparkSession.conf.get(ModeKey, "local") match {
+      case "local" => df.localCheckpoint()
+      case "reliable" => df.checkpoint()
+      case m => throw new IllegalArgumentException(
+        s"$ModeKey must be local|reliable, got '$m'")
     }
 }

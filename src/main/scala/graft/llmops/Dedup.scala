@@ -176,8 +176,8 @@ object Dedup {
     * the partitioning the join needs anyway). The capped shingle set is
     * consumed three times (both join sides + the size agg), so it is
     * materialized ONCE via [[graft.core.Materialize]] (localCheckpoint
-    * locally; reliable checkpoint / replicated persist under cluster
-    * config — see that object for the failure-tolerance contract).
+    * locally; reliable checkpoint under cluster config — see that object
+    * for the failure-tolerance contract).
     *
     * Factored as a reusable table (d1 < d2, jaccard ≥ minJac) because
     * the q248 store-boundary audit joins it as its exact verify stage

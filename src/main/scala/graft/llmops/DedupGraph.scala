@@ -167,22 +167,17 @@ object DedupGraph {
     // identity, exactly the conclusion the old isEmpty reached 3 jobs
     // later. Equality-only/zero-stays-zero usage, so the reliable-mode
     // double-execution caveat (see ccFixpoint) cannot flip the branch.
-    // Under the lazy persist mode the explicit count action remains
-    // (Materialize.isEager) — no Observation.get deadlock.
     val obs = org.apache.spark.sql.Observation()
     val postDf = graft.core.Materialize(
       postings.join(fullDf, "shingle")
         .select(col("doc_id"), col("shingle"), col("__df_full"))
         .observe(obs, count(when(col("__df_full") > 50, 1)).as("n_crossing")))
-    val nCrossing: Long =
-      if (graft.core.Materialize.isEager(postDf))
-        obs.get.get("n_crossing").orNull match {
-          case null => 0L
-          case n: java.lang.Long => n.longValue
-          case other => throw new IllegalStateException(
-            s"repairStoredLabels observe: unexpected metric type $other")
-        }
-      else postDf.filter(col("__df_full") > 50).count()
+    val nCrossing: Long = obs.get.get("n_crossing").orNull match {
+      case null => 0L
+      case n: java.lang.Long => n.longValue
+      case other => throw new IllegalStateException(
+        s"repairStoredLabels observe: unexpected metric type $other")
+    }
     if (nCrossing == 0L) return stored
     val keptPost = postDf.filter(col("__df_full") <= 50)
       .select("doc_id", "shingle")
@@ -302,8 +297,8 @@ object DedupGraph {
     * keyed join + min-aggregate over the LABEL table — which holds only
     * edge-endpoint docs, a vanishing fraction of a real corpus — followed
     * by a lineage cut ([[graft.core.Materialize]]: localCheckpoint locally,
-    * reliable checkpoint/replicated persist under cluster config — a
-    * 100-round lineage would otherwise stack-overflow the planner).
+    * a reliable checkpoint under cluster config — a 100-round lineage
+    * would otherwise stack-overflow the planner).
     * Convergence detection costs ONE tiny aggregate per round, not a join:
     * labels only ever DECREASE under min-propagation, so the label-sum is
     * strictly monotone and `sum(lbl)` (decimal — no Long overflow at any
@@ -328,22 +323,14 @@ object DedupGraph {
     */
   private[llmops] def ccFixpoint(edges: DataFrame, init: DataFrame,
                                  maxRounds: Int): (DataFrame, Int) = {
-    // Persist-mode iteration guard (round-12 verdict item 4): ONE choke
-    // point covers every CC caller — connectedComponents, the seeded and
-    // delta variants, and incrementalCC all funnel here, and the delta
-    // path's contracted edge plan embeds the caller's stored-label plan,
-    // so a live lazy store state is caught before the first round nests it
-    graft.core.Materialize.requireIterationSafe(edges, "ccFixpoint(edges)")
-    graft.core.Materialize.requireIterationSafe(init, "ccFixpoint(init)")
     // Convergence detection rides the materialize job itself (round 15,
     // guide §1/§2: the measured per-round cost of this loop at bench scale
     // is DRIVER-SYNCHRONIZED JOBS, not data): `observe()` plants a
     // CollectMetrics node above the table being checkpointed, so the label
     // sum falls out of the SAME eager localCheckpoint/checkpoint action —
     // one job per round where the separate `.agg(sum).head` used to make
-    // it two. Under the lazy persist mode the explicit aggregate action
-    // remains (Materialize.isEager) — it executes the observed plan, so
-    // the Observation is fulfilled either way and never deadlocks.
+    // it two. Every Materialize mode is eager, so the Observation is
+    // fulfilled by the time it is read.
     // EQUALITY-ONLY contract on the observed values (round-15 ADVICE):
     // under materialize mode 'reliable', Dataset.checkpoint() executes
     // the plan twice (eager count + checkpoint write), which can DOUBLE
@@ -351,31 +338,21 @@ object DedupGraph {
     // read 2x their true value. Safe here because the detectors only
     // compare same-mode values across rounds for EQUALITY (2x == 2x, and
     // zero stays zero); never use these metrics as absolute values.
-    def observedSum(df: DataFrame): (DataFrame, () => java.math.BigDecimal) = {
+    def observedSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
       val obs = org.apache.spark.sql.Observation()
       val o = df.observe(obs, sum(col("lbl").cast(DecimalType(38, 0))).as("s"))
       val m = graft.core.Materialize(o)
-      val get = () =>
-        if (graft.core.Materialize.isEager(m))
-          // empty label table (no edges at all) sums to NULL → zero, so
-          // the loop converges on the first round instead of NPE-ing
-          obs.get.get("s").orNull match {
-            case null => java.math.BigDecimal.ZERO
-            case d: java.math.BigDecimal => d
-            case d: scala.math.BigDecimal => d.bigDecimal
-            case other => throw new IllegalStateException(
-              s"ccFixpoint observe: unexpected metric type $other")
-          }
-        else {
-          val s = m.agg(sum(col("lbl").cast(DecimalType(38, 0))).as("s"))
-            .head.getDecimal(0)
-          if (s == null) java.math.BigDecimal.ZERO else s
-        }
-      (m, get)
+      // empty label table (no edges at all) sums to NULL → zero, so
+      // the loop converges on the first round instead of NPE-ing
+      (m, obs.get.get("s").orNull match {
+        case null => java.math.BigDecimal.ZERO
+        case d: java.math.BigDecimal => d
+        case d: scala.math.BigDecimal => d.bigDecimal
+        case other => throw new IllegalStateException(
+          s"ccFixpoint observe: unexpected metric type $other")
+      })
     }
-    val (init0, initSum) = observedSum(init)
-    var labels = init0
-    var prevSum = initSum()
+    var (labels, prevSum) = observedSum(init)
     var round = 0
     var converged = false
     while (!converged && round < maxRounds) {
@@ -413,9 +390,8 @@ object DedupGraph {
           prop.select(col("id").as("__lid"), col("lbl").as("__lbl2")),
           col("lbl") === col("__lid"), "left")
         .select(col("id"), coalesce(col("__lbl2"), col("lbl")).as("lbl"))
-      val s = propSum()
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
+      converged = propSum.compareTo(prevSum) == 0
+      prevSum = propSum
       labels = next
     }
     (labels.select(col("id").as("doc_id"), col("lbl").as("cluster")), round)
@@ -815,9 +791,6 @@ object DedupGraph {
     */
   def kCoreFixpoint(edges0: DataFrame, k: Int,
                     maxRounds: Int = 50): (DataFrame, Int, Boolean) = {
-    // same persist-mode iteration guard as ccFixpoint (the k-core peel
-    // nests its input plan per round identically)
-    graft.core.Materialize.requireIterationSafe(edges0, "kCoreFixpoint(edges)")
     // Convergence probe fused into the materialize job (round 15, the
     // ccFixpoint observe() idiom): the detector counts EDGES instead of
     // distinct nodes — equivalent on this symmetric edge set, because an
@@ -827,24 +800,18 @@ object DedupGraph {
     // this round", so round counts and the converged flag are unchanged —
     // and count(1) is observable while countDistinct is not (CollectMetrics
     // rejects distinct aggregates). One job per round instead of two.
-    def observedCount(df: DataFrame): (DataFrame, () => Long) = {
+    def observedCount(df: DataFrame): (DataFrame, Long) = {
       val obs = org.apache.spark.sql.Observation()
       val o = df.observe(obs, count(lit(1)).as("n"))
       val m = graft.core.Materialize(o)
-      val get = () =>
-        if (graft.core.Materialize.isEager(m))
-          obs.get.get("n").orNull match {
-            case null => 0L
-            case n: java.lang.Long => n.longValue
-            case other => throw new IllegalStateException(
-              s"kCoreFixpoint observe: unexpected metric type $other")
-          }
-        else m.count()
-      (m, get)
+      (m, obs.get.get("n").orNull match {
+        case null => 0L
+        case n: java.lang.Long => n.longValue
+        case other => throw new IllegalStateException(
+          s"kCoreFixpoint observe: unexpected metric type $other")
+      })
     }
-    val (cur0, curCount) = observedCount(edges0)
-    var cur = cur0
-    var prevE = curCount()
+    var (cur, prevE) = observedCount(edges0)
     var round = 0
     var converged = prevE == 0L // empty graph is already its own k-core
     while (!converged && round < maxRounds) {
@@ -872,9 +839,8 @@ object DedupGraph {
         .filter(col("__dgs") >= k && col("__dgd") >= k)
         .select("src", "dst"))
       cur = next
-      val n = nextCount()
-      converged = n == prevE
-      prevE = n
+      converged = nextCount == prevE
+      prevE = nextCount
     }
     (cur, round, converged)
   }

@@ -344,23 +344,6 @@ object IncrementalDedup {
       docs.select(col("doc_id"), lit(0).as("band_idx"), lit(0L).as("band_hash")))
   }
 
-  /** One degenerate store build + first (cold) increment per (JVM,
-    * sf-dir), memoized like ClusterStore's: write store₀'s one-bucket
-    * band table to parquet, run batch₁'s increment against the COLD
-    * store — and SNAPSHOT that increment to parquet BEFORE the append,
-    * a synchronous write action that executes the candidate join
-    * regardless of the Materialize mode (under `persist`,
-    * Materialize is lazy and a deferred inc₁ scan would see the
-    * appended batch₁ rows — the round-9 ADVICE corruption path) —
-    * then APPEND batch₁'s bands via the same mode("append") path
-    * [[appendToStore]] uses, so the per-call increment (batch₂) runs
-    * against the WARM store₀ ∪ batch₁ state. The memo holds only the
-    * fixture DIRECTORY (parquet bytes are session-independent, so a
-    * later SparkSession in the same JVM re-reads them safely instead
-    * of inheriting a dead session's DataFrame handle); the temp dir
-    * is removed by a JVM shutdown hook. Splits: store₀ =
-    * doc_id % 5 ∈ {2,3,4}, batch₁ = 1, batch₂ = 0.
-    */
   /** The audit's corpus slice: a fixed doc_id bound, NOT SF-relative, so
     * the quadratic all-pairs configuration stays bounded on any table the
     * query is pointed at (q244's bounded-fixture discipline — its 2k
@@ -372,39 +355,41 @@ object IncrementalDedup {
 
   private val auditBuilt =
     scala.collection.concurrent.TrieMap.empty[String, String]
+
+  /** One degenerate store build + first (cold) increment per (JVM,
+    * sf-dir), memoized like ClusterStore's: write store₀'s one-bucket
+    * band table to parquet, run batch₁'s increment against the COLD
+    * store and SNAPSHOT it to parquet, then APPEND batch₁'s bands via
+    * the same mode("append") path [[appendToStore]] uses, so the
+    * per-call increment (batch₂) runs against the WARM store₀ ∪ batch₁
+    * state. The memo holds only the fixture DIRECTORY (parquet bytes are
+    * session-independent, so a later SparkSession in the same JVM
+    * re-reads them safely instead of inheriting a dead session's
+    * DataFrame handle); the temp dir is removed by a JVM shutdown hook.
+    * Splits: store₀ = doc_id % 5 ∈ {2,3,4}, batch₁ = 1, batch₂ = 0.
+    */
   private def auditStore(s: SparkSession, d: String): String =
     auditBuilt.getOrElseUpdate(d, {
       val dir = graft.core.TempDirs.scratch("graft-neardup-audit-")
-      buildAuditFixture(s, d, dir)
+      val ids = Tables.documents(s, d).select("doc_id")
+        .filter(col("doc_id") < AuditDocLimit)
+      oneBucketBands(ids.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 5 =!= 1),
+          auditOnly = true)
+        .write.mode("overwrite").parquet(s"$dir/buckets.parquet")
+      // Snapshot the cold increment BEFORE the append: the memo keeps
+      // only the directory, so this file is the one record of inc₁ — an
+      // increment recomputed from the directory later would scan the
+      // post-append bucket table and emit batch₁-vs-batch₁ pairs the
+      // oracle excludes.
+      candidatesAgainstStore(
+        s.read.parquet(s"$dir/buckets.parquet"),
+        oneBucketBands(ids.filter(col("doc_id") % 5 === 1), auditOnly = true)
+          .select(col("doc_id").as("d1"), col("band_idx"), col("band_hash")))
+        .write.mode("overwrite").parquet(s"$dir/inc1.parquet")
+      oneBucketBands(ids.filter(col("doc_id") % 5 === 1), auditOnly = true)
+        .write.mode("append").parquet(s"$dir/buckets.parquet")
       dir
     })
-
-  /** The memo body, extracted so the persist-mode regression test
-    * ([[IncrementalDedupSpec]] "inc1 snapshot pins the pre-append
-    * store state under the lazy persist Materialize mode") can build a
-    * fresh fixture under any `spark.graft.materialize.mode` without
-    * going through (or polluting) the per-(JVM, dir) memo.
-    */
-  private[llmops] def buildAuditFixture(s: SparkSession, d: String,
-                                        dir: String): Unit = {
-    val ids = Tables.documents(s, d).select("doc_id")
-      .filter(col("doc_id") < AuditDocLimit)
-    oneBucketBands(ids.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 5 =!= 1),
-        auditOnly = true)
-      .write.mode("overwrite").parquet(s"$dir/buckets.parquet")
-    // Snapshot the cold increment to parquet BEFORE the append: the
-    // write is a synchronous action, so inc₁ is pinned against the
-    // pre-append bucket state in every Materialize mode (a lazy
-    // `persist` handle could otherwise first execute AFTER the append
-    // and see batch₁-vs-batch₁ pairs the oracle excludes).
-    candidatesAgainstStore(
-      s.read.parquet(s"$dir/buckets.parquet"),
-      oneBucketBands(ids.filter(col("doc_id") % 5 === 1), auditOnly = true)
-        .select(col("doc_id").as("d1"), col("band_idx"), col("band_hash")))
-      .write.mode("overwrite").parquet(s"$dir/inc1.parquet")
-    oneBucketBands(ids.filter(col("doc_id") % 5 === 1), auditOnly = true)
-      .write.mode("append").parquet(s"$dir/buckets.parquet")
-  }
 
   /** q248: driver-oracled audit twin for [[q74]] — the q244/q245
     * degenerate-config pattern pushed ACROSS THE STORE BOUNDARY (round-9

@@ -1,13 +1,11 @@
 package graft.core
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkTestBase
 import graft.llmops.Dedup
 
-/** The materialization strategy hook: all three modes must produce the
-  * same answers (they differ only in failure tolerance), and the unknown
-  * mode must fail loudly rather than silently recompute.
+/** The materialization strategy hook: both modes must produce the same
+  * answers (they differ only in failure tolerance), and an unknown mode
+  * must fail loudly rather than silently recompute.
   */
 class MaterializeSpec extends SparkTestBase {
 
@@ -27,7 +25,7 @@ class MaterializeSpec extends SparkTestBase {
   test("local, reliable, and persist modes return identical results") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
-    val results = Seq("local", "reliable", "persist").map { mode =>
+    val results = Seq("local", "reliable").map { mode =>
       spark.conf.set(Materialize.ModeKey, mode)
       try runNearDup() finally spark.conf.unset(Materialize.ModeKey)
     }
@@ -45,99 +43,15 @@ class MaterializeSpec extends SparkTestBase {
   }
 
   test("unknown mode fails fast") {
-    spark.conf.set(Materialize.ModeKey, "bogus")
-    try intercept[IllegalArgumentException](Materialize(docs()))
-    finally spark.conf.unset(Materialize.ModeKey)
-  }
-
-  test("requireIterationSafe: live lazy fixpoint input under persist mode gets the loud require, not the analyzer OOM") {
-    import spark.implicits._
-    // the round-12 caveat, now mechanical: persist never truncates
-    // lineage, so a fixpoint nests its input plan ~4x into every round —
-    // a bounded-composition input is safe (the DedupGraphSpec persist pin
-    // legitimately enters at 8,225 nodes and passes), but the
-    // unbounded-feedback class (a previous fixpoint's live output fed
-    // back, ~100k+ nodes) OOMs the analyzer. Land a tiny edge table,
-    // then union-double it 16 times: ~131k logical nodes, the failure
-    // class's shape and size.
-    val dir = java.nio.file.Files.createTempDirectory("graft-itersafe").toString
-    Seq((1L, 2L), (2L, 1L)).toDF("src", "dst").write.parquet(s"$dir/edges")
-    val landed = spark.read.parquet(s"$dir/edges")
-    spark.conf.set(Materialize.ModeKey, "persist")
-    try {
-      Materialize.requireIterationSafe(landed, "test") // storage-backed: fine
-      var live = landed
-      (1 to 16).foreach(_ => live = live.union(live))
-      val e = intercept[IllegalArgumentException](
-        Materialize.requireIterationSafe(live, "ccFixpoint(edges)"))
-      assert(e.getMessage.contains("persist") && e.getMessage.contains("parquet"))
-      // ...and through the real entry points, BEFORE any round runs
-      intercept[IllegalArgumentException](
-        graft.llmops.DedupGraph.connectedComponents(live))
-      intercept[IllegalArgumentException](
-        graft.llmops.DedupGraph.kCoreFixpoint(live, 2))
-      // other modes truncate lineage per round: no-op even on the huge plan
-      spark.conf.set(Materialize.ModeKey, "local")
-      Materialize.requireIterationSafe(live, "test")
-    } finally spark.conf.unset(Materialize.ModeKey)
-  }
-
-  test("requireIterationSafe: a huge plan routed through a subquery expression cannot evade the bound") {
-    import spark.implicits._
-    // round-13 ADVICE: LogicalPlan.collect walks only the main tree, so an
-    // unbounded-feedback input hidden inside IN/EXISTS/scalar subqueries
-    // previously evaded the node bound entirely. Same failure-class shape
-    // as the direct pin above (~131k nodes from 16 union-doublings), but
-    // fed in as the IN-subquery of a 3-node outer query.
-    val dir = java.nio.file.Files.createTempDirectory("graft-itersafe-sub").toString
-    Seq((1L, 2L), (2L, 1L)).toDF("src", "dst").write.parquet(s"$dir/edges")
-    val landed = spark.read.parquet(s"$dir/edges")
-    var live = landed
-    (1 to 16).foreach(_ => live = live.union(live))
-    live.createOrReplaceTempView("itersafe_huge_live")
-    landed.createOrReplaceTempView("itersafe_small")
-    val outer = spark.sql(
-      "SELECT * FROM itersafe_small WHERE src IN (SELECT src FROM itersafe_huge_live)")
-    spark.conf.set(Materialize.ModeKey, "persist")
-    try {
-      val e = intercept[IllegalArgumentException](
-        Materialize.requireIterationSafe(outer, "ccFixpoint(edges)"))
-      assert(e.getMessage.contains("logical nodes"))
-      // control: the same outer shape over a bounded subquery passes
-      Materialize.requireIterationSafe(spark.sql(
-        "SELECT * FROM itersafe_small WHERE src IN (SELECT src FROM itersafe_small)"),
-        "test")
-    } finally spark.conf.unset(Materialize.ModeKey)
-  }
-
-  test("requireIterationSafe: the persistMaxPlanNodes escape hatch admits a deliberately-raised bound") {
-    import spark.implicits._
-    // round-13 verdict item 3: the require's remedy message names the
-    // config knob, but nothing proved the documented escape path works —
-    // set the bound low, hit the require, raise it, fixpoint completes.
-    val dir = java.nio.file.Files.createTempDirectory("graft-itersafe-knob").toString
-    // symmetric edge list (the CC input contract): {1,2,3} and {10,11}
-    Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (10L, 11L), (11L, 10L))
-      .toDF("src", "dst").write.parquet(s"$dir/edges")
-    // a legitimate composed plan over the landed base: > 4 logical nodes
-    val composed = spark.read.parquet(s"$dir/edges")
-      .filter(col("src") >= 0L).select(col("src"), col("dst"))
-      .distinct()
-    spark.conf.set(Materialize.ModeKey, "persist")
-    try {
-      spark.conf.set(Materialize.PersistMaxPlanNodesKey, "4")
-      val e = intercept[IllegalArgumentException](
-        graft.llmops.DedupGraph.connectedComponents(composed))
-      assert(e.getMessage.contains(Materialize.ModeKey))
-      // raise the bound deliberately: the guard admits the plan and the
-      // fixpoint runs to completion with correct labels
-      spark.conf.set(Materialize.PersistMaxPlanNodesKey, "32768")
-      val labels = graft.llmops.DedupGraph.connectedComponents(composed)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-    } finally {
-      spark.conf.unset(Materialize.PersistMaxPlanNodesKey)
-      spark.conf.unset(Materialize.ModeKey)
+    // "persist" is a retired mode: a deployment setting that still names
+    // it must fail loudly, not silently run another mode
+    for (mode <- Seq("bogus", "persist")) {
+      spark.conf.set(Materialize.ModeKey, mode)
+      try {
+        val e = intercept[IllegalArgumentException](Materialize(docs()))
+        assert(e.getMessage.contains("local|reliable") &&
+          e.getMessage.contains(s"'$mode'"), e.getMessage)
+      } finally spark.conf.unset(Materialize.ModeKey)
     }
   }
 }

@@ -151,19 +151,14 @@ class DedupGraphSpec extends SparkTestBase {
       s"cap-crossing gram must be repaired, not over-merged: $got")
   }
 
-  test("q108 crossing repair is Materialize-mode independent: lazy persist yields the cold answer") {
-    // q248's round-10 lesson, applied to the NEW repair path: `persist`
-    // mode makes every Materialize LAZY, changing when intermediate
-    // tables evaluate; the repair's dropped-pair existence branch
-    // (dropped.isEmpty is the forcing action) must still see the right
-    // state. PRODUCTION-FAITHFUL shape matters here: q108 reads its
-    // store state from PARQUET (the fixture), which cuts lineage at the
-    // source — feeding incrementalCC live lazy storeState plans instead
-    // nests three fixpoints' un-truncated lineage and is exactly the
-    // anti-pattern the fixture discipline exists to prevent (measured:
-    // it OOMs the analyzer under persist). So: build the store state
-    // under the DEFAULT mode, round-trip it through parquet, then run
-    // the per-batch body under persist.
+  test("q108 crossing repair is Materialize-mode independent: reliable yields the cold answer") {
+    // `reliable`'s Dataset.checkpoint() can execute each plan twice, and
+    // so double the observe() metrics the repair's crossing probe and the
+    // CC fixpoint's convergence detector read. Both only test the values
+    // for zero or for equality across rounds, so the answer must not
+    // move. Production-faithful shape: q108 reads its store state from
+    // parquet, so the store state is built under the default mode and
+    // round-tripped through parquet before the per-batch body runs.
     val g = "g1 g2 g3 g4 g5"; val h = "h1 h2 h3 h4 h5"
     val rows = Seq(
       row(1, "a1 a2 a3 a4 a5 " + g), row(2, "b1 b2 b3 b4 b5 " + g),
@@ -174,17 +169,18 @@ class DedupGraphSpec extends SparkTestBase {
     val docs = graft.Tables.documents(spark, dir)
     val (stored0, postings0) = DedupGraph.storeState(
       docs.filter(col("doc_id") % 5 =!= 0))
-    val fx = graft.core.TempDirs.scratch("dedupgraph-persist-fx-")
+    val fx = graft.core.TempDirs.scratch("dedupgraph-reliable-fx-")
     stored0.write.mode("overwrite").parquet(s"$fx/stored.parquet")
     postings0.write.mode("overwrite").parquet(s"$fx/postings.parquet")
-    spark.conf.set(graft.core.Materialize.ModeKey, "persist")
+    spark.sparkContext.setCheckpointDir(graft.core.TempDirs.scratch("dedupgraph-ckpt-"))
+    spark.conf.set(graft.core.Materialize.ModeKey, "reliable")
     try {
       val got = DedupGraph.incrementalCC(docs,
           spark.read.parquet(s"$fx/stored.parquet"),
           spark.read.parquet(s"$fx/postings.parquet"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(got == Map(6L -> 6L, 7L -> 6L),
-        s"lazy-persist Materialize diverged from the cold answer: $got")
+        s"reliable Materialize diverged from the cold answer: $got")
     } finally spark.conf.unset(graft.core.Materialize.ModeKey)
   }
 
@@ -540,10 +536,9 @@ class DedupGraphSpec extends SparkTestBase {
     }
   }
 
-  test("ccFixpoint property pin: fused detector fires on the same round with identical labels (random graphs, local+persist)") {
+  test("ccFixpoint property pin: fused detector fires on the same round with identical labels (random graphs, local+reliable)") {
     import spark.implicits._
-    // random symmetric graphs, landed to parquet so the persist-mode run
-    // is storage-backed (the requireIterationSafe contract)
+    // random symmetric graphs, landed to parquet
     def landedEdges(seed: Int, n: Int, p: Double): org.apache.spark.sql.DataFrame = {
       val rnd = new scala.util.Random(seed)
       val half = for {
@@ -586,24 +581,22 @@ class DedupGraphSpec extends SparkTestBase {
       assert(fr == rr || fr == rr + 1,
         s"seed=$seed local: fused detector fired on round $fr, two-job reference on $rr")
     }
-    // PERSIST mode never truncates lineage, so each round nests the plan
-    // ~4x and a many-round sparse graph blows up ANALYSIS exponentially —
-    // the exact documented hazard Materialize.requireIterationSafe exists
-    // for (a first cut of this spec ran a diameter-~8 path under persist
-    // and spent minutes per round in plan utilities). Production persist
-    // usage is legal only with bounded round structure, so the persist
-    // leg pins the detector on SHALLOW graphs (dense clique-ish, 2-3
-    // rounds) — the regime persist actually runs in.
+    // RELIABLE mode: Dataset.checkpoint() can execute each round's plan
+    // twice and so double the observed label sums; the detector compares
+    // them only for equality, so labels and rounds must still match. Two
+    // shallow graphs (2-3 rounds) keep the per-round checkpoint writes
+    // few.
+    spark.sparkContext.setCheckpointDir(graft.core.TempDirs.scratch("ccprop-ckpt-"))
     for ((seed, n, p) <- Seq((4, 24, 0.30), (5, 16, 0.50))) {
       val edges = landedEdges(seed, n, p)
-      val (fl, fr, rl, rr) = run(edges, "persist")
-      assert(fl == rl, s"seed=$seed persist: labels diverge")
+      val (fl, fr, rl, rr) = run(edges, "reliable")
+      assert(fl == rl, s"seed=$seed reliable: labels diverge")
       assert(fr == rr || fr == rr + 1,
-        s"seed=$seed persist: fused detector fired on round $fr, two-job reference on $rr")
+        s"seed=$seed reliable: fused detector fired on round $fr, two-job reference on $rr")
     }
     // degenerate case: an empty edge set must converge identically too
     val empty = landedEdges(99, 4, 0.0)
-    for (mode <- Seq("local", "persist")) {
+    for (mode <- Seq("local", "reliable")) {
       val (fl, fr, rl, rr) = run(empty, mode)
       assert(fl == rl && fl.isEmpty)
       assert(fr == rr, s"empty graph: $fr vs $rr")

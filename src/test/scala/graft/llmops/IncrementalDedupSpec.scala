@@ -208,33 +208,4 @@ class IncrementalDedupSpec extends SparkTestBase {
     // near-dup sees it too (identical text → est 1.0 against the landed copy)
     assert(near.filter(col("d2") === copyId && col("est_jaccard") === 1.0).count() == 1)
   }
-
-  test("inc1 snapshot pins the pre-append store state under the lazy persist Materialize mode") {
-    // The round-10 ADVICE corruption path: under `persist`, Materialize
-    // is LAZY, so before the fixture snapshotted inc₁ to parquet the
-    // cold increment's first execution could be deferred until AFTER the
-    // batch₁ append — at which point the candidate join would see
-    // batch₁'s own bands in the store and emit batch₁-vs-batch₁ pairs
-    // the oracle excludes. This builds a FRESH fixture (bypassing the
-    // per-JVM memo) under that exact mode and asserts the pin holds:
-    // every inc₁ pair is batch₁ (d1 % 5 = 1) × store₀ (d2 % 5 ∈ {2,3,4}).
-    val dir = graft.core.TempDirs.scratch("persist-audit-")
-    spark.conf.set(graft.core.Materialize.ModeKey, "persist")
-    try IncrementalDedup.buildAuditFixture(spark, sf("sf0.001"), dir)
-    finally spark.conf.unset(graft.core.Materialize.ModeKey)
-
-    val inc1 = spark.read.parquet(s"$dir/inc1.parquet").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(inc1.nonEmpty, "degenerate one-bucket audit must produce pairs")
-    assert(inc1.forall(_._1 % 5 == 1), "d1 side must be batch-1 docs only")
-    assert(inc1.forall(p => p._2 % 5 >= 2),
-      s"store side leaked non-store docs (batch self-pairs?): " +
-        inc1.filter(p => p._2 % 5 < 2).take(5).mkString(","))
-
-    // ...and the append DID land: the warm bucket table now holds
-    // batch₁ bands, so the pin above is meaningful (pre- vs post-append
-    // states genuinely differ).
-    val warm = spark.read.parquet(s"$dir/buckets.parquet")
-    assert(warm.filter(col("doc_id") % 5 === 1).count() > 0)
-  }
 }
