@@ -1,11 +1,15 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Stage-level profiler for a single registry query: runs the query N times
   * and prints per-stage wall time + task counts, so bench outliers (q27/q30)
-  * can be attributed to a concrete stage instead of guessed at.
+  * can be attributed to a concrete stage instead of guessed at. Each
+  * iteration also prints how many classes Spark compiled for it
+  * (`compiled=`, from `CodegenMetrics`): a repeated iteration that still
+  * compiles many is evicting the generated-class cache.
   *
   * Usage: runMain graft.Profile <queryName> [sfDir] [iters]
   */
@@ -42,11 +46,13 @@ object Profile {
     val q = QueryRegistry.byName(name)
     (1 to iters).foreach { i =>
       stages.synchronized(stages.clear())
+      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       val n = q.run(spark, sfDir).queryExecution.toRdd.count()
       val total = (System.nanoTime() - t0) / 1e9
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
       Thread.sleep(200) // let listener drain
-      println(f"== iter $i: $name rows=$n total=$total%.2fs ==")
+      println(f"== iter $i: $name rows=$n total=$total%.2fs compiled=$compiled ==")
       stages.synchronized {
         stages.sortBy(-_._3).take(15).foreach { case (id, nm, dur, tasks) =>
           println(f"  stage $id%4d ${dur / 1000.0}%7.2fs tasks=$tasks%3d  $nm")

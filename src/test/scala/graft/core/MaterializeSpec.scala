@@ -22,7 +22,7 @@ class MaterializeSpec extends SparkTestBase {
     Dedup.minhashPairs(Materialize(Dedup.minhashSignatures(docs(), 3)), minSim = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
 
-  test("local, reliable, and persist modes return identical results") {
+  test("local and reliable modes return identical results") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     val results = Seq("local", "reliable").map { mode =>
