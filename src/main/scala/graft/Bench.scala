@@ -1,454 +1,161 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths, StandardOpenOption}
+
+import scala.util.control.NonFatal
+
+/** The driver's bench: every registry query, timed in one warm session.
+  *
+  * Each query runs `SPARK_GRAFT_BENCH_ITERS` times (default 3) and
+  * reports the median, which one GC/JIT/scheduling spike in either
+  * direction cannot move. A run is timed with `queryExecution.toRdd.count()`,
+  * which executes the FULL physical plan (final sort and projection
+  * included); `df.count()` would let Catalyst collapse the plan to a bare
+  * aggregate and under-measure the query. A failed run records
+  * [[FailurePenaltySec]], never a fast time.
+  *
+  * Output:
+  *   - one stdout line ([[stdoutLine]]) for the driver's recorded tail;
+  *   - one artifact line ([[artifactLine]]) with every query's
+  *     median/min/max and the run's noise context, written to
+  *     `SPARK_GRAFT_BENCH_OUT` and appended to `SPARK_GRAFT_BENCH_HIST`.
+  *
+  * Settings (environment): `SPARK_GRAFT_SF_DIR` (tables, default sf0.1),
+  * `SPARK_GRAFT_BENCH_ITERS`, `SPARK_GRAFT_BENCH_ONLY` (comma-separated
+  * query-name prefixes; unset = the whole registry), `SPARK_GRAFT_BENCH_OUT`
+  * and `SPARK_GRAFT_BENCH_HIST`.
+  */
 object Bench {
+  val FailurePenaltySec = 3600.0
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val iterations = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").toSeq.filter(_.nonEmpty))
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft-bench.json")
+    val hist = sys.env.getOrElse("SPARK_GRAFT_BENCH_HIST", "/tmp/graft-bench-history.jsonl")
+    val (load1Start, stealStart) = (load1(), stealSec())
     val spark = LocalSession()
     // Warm-up: JIT/codegen paths + parquet reader + shuffle machinery, so
     // the first measured query doesn't pay session start-up.
     spark.range(1000000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000)
       .groupBy("l_returnflag").count().collect()
-    // MEDIAN of 3 iterations per query (round-6 verdict item 4): this
-    // container shows ±2x run-to-run noise spikes (GC/JIT/scheduling).
-    // The earlier min-of-3 hid real regressions on the slow side; the
-    // median is robust to a single spike in EITHER direction, and the
-    // history file records min/max so the spread itself is auditable.
-    // Container-health calibration (round-7 verdict item 6): the r7
-    // driver run was load-distorted and only a judge-side re-bench could
-    // prove it. A FIXED probe — full lineitem scan + keyed aggregate,
-    // identical work every run — timed (median of 3) right after warm-up
-    // and again after the last query stamps machine speed INTO the
-    // artifact: a calib value ~3x its history line means the whole run is
-    // noisy, and start-vs-end drift shows load arriving mid-run.
-    def calibSamples(): Seq[Double] =
-      (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        spark.read.parquet(s"$sfDir/lineitem.parquet")
-          .groupBy("l_returnflag", "l_linestatus")
-          .agg(org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)),
-            org.apache.spark.sql.functions.sum("l_quantity"))
-          .queryExecution.toRdd.count()
-        (System.nanoTime() - t0) / 1e9
-      }
-    def calibProbe(): Seq[Double] = calibSamples().sorted
-    val calibStartSamples = calibProbe()
-    val calibStart = calibStartSamples(1)
-    val iterations = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    val debug = sys.env.contains("SPARK_GRAFT_BENCH_DEBUG")
-    // Local-iteration filter (builder tooling; driver sets no env → full
-    // run): comma-separated name prefixes, mirrors Verify's filter.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").toSeq.filter(_.nonEmpty))
-    def selected(name: String): Boolean =
-      only.forall(_.exists(name.startsWith))
-    val samples = SparkEntry.queries.toSeq.filter(kv => selected(kv._1))
+    val samples = SparkEntry.queries.toSeq
+      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
       .sortBy(_._1).map { case (name, fn) =>
-      val times = (1 to iterations).map { i =>
-        val t0 = System.nanoTime()
-        // a failed query records a large penalty, never a fast time — a
-        // regression must not masquerade as a speed-up.
-        // toRdd.count() executes the FULL physical plan (final sort and
-        // projection included) — df.count() would let Catalyst collapse
-        // the plan to a bare aggregate and under-measure the query.
-        val t = try { fn(spark, sfDir).queryExecution.toRdd.count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); 3600.0
-        }
-        if (debug) System.err.println(f"[bench] $name iter$i ${t}%.2fs")
-        t
-      }.sorted
-      name -> times
-    }
-    val calibEndSamples = calibProbe()
-    val calibEnd = calibEndSamples(1)
-    def median(ts: Seq[Double]): Double = ts(ts.length / 2)
-    // Machine-speed-invariant per-query times (round-8 verdict item 5):
-    // the median of all six calibration samples is this run's unit of
-    // machine speed; "norm" = query_median / calib_median makes history
-    // lines comparable across rounds without a judge-side re-bench
-    // (container 2x slower → calib 2x larger → norm unchanged).
-    val calibMedian =
-      median((calibStartSamples ++ calibEndSamples).sorted)
-    val results = samples.map { case (n, ts) => n -> median(ts) }.toMap
-    def fmt(v: Double): String = BenchGate.fmtSec(v)
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    def mapOf(entries: Seq[(String, Double)]): String =
-      entries.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-    // Mechanized noise adjudication (round-9 verdict item 3): compare this
-    // run's calib-normalized medians against the best of the last 5
-    // same-SF history lines, BEFORE this run appends its own line.
-    // Report-only — the judge reads `norm_regressions` instead of
-    // re-benching by hand; an empty map is the expected healthy state.
-    val hist = sys.env.getOrElse("SPARK_GRAFT_BENCH_HIST", "/tmp/graft-bench-history.jsonl")
-    val norms = samples.map { case (n, ts) =>
-      n -> (if (calibMedian > 0) median(ts) / calibMedian else 0.0) }
-    // History-file identity (round-11 ADVICE): the default path is
-    // world-writable /tmp, so stamp what was actually read — line count +
-    // sha-256 prefix — into the artifact; a tampered/truncated baseline
-    // is then visible instead of silently feeding ghost flags. ONE read
-    // feeds both the hash and the baseline: a second read would open a
-    // window for a writer to make the attestation describe a different
-    // file than the one adjudicated.
-    val histBytes = BenchGate.readHistoryBytes(hist)
-    val (histLines, histSha) = BenchGate.historyIdentity(histBytes)
-    // half this run's coverage: full runs ignore builder-subset
-    // history lines; a subset run still compares against full lines
-    val window =
-      BenchGate.loadHistoryBytes(histBytes, sfDir, minQueries = norms.size / 2)
-    val (normShift, normRegs, secVetoed) =
-      BenchGate.adjudicate(norms.toMap, window,
-        // raw median seconds enable the seconds-confluence veto: a flag
-        // must be slower in BOTH currencies (calib-normalized AND raw)
-        // before it reports — kills the denominator-variance ghost class;
-        // vetoed entries stay visible in the artifact's sec_vetoed map
-        currentSec = results)
-    // --- files_changed stamping (round-13 verdict item 1): discriminate
-    // code from machine BY ELIMINATION in-run. Each flag's baseline is a
-    // history line; if that line carries a clean-tree commit and the
-    // query's defining file (committed manifest, CI-verified) has no diff
-    // against it, a persistent drift-day flag is machine — previously the
-    // one remaining judge-side TimeQ adjudication per round. Every git
-    // failure mode (no repo, unknown sha, no manifest entry, dirty
-    // baseline) degrades to null = honestly unknown, never a guess.
-    // The bounded harness lives in BenchGate.boundedLines (spec-driven
-    // with a fake Process — the retimeNorm convention). After ONE hung
-    // git, stop asking AND say so: each call's bound is 30 s, and a
-    // flag-flood run on a machine where git wedges would otherwise burn
-    // 30 s × (distinct diff pairs) of post-measurement wall-clock. A
-    // plain nonzero exit (unknown sha, not a repo) does NOT poison —
-    // only a hang. The stderr line keeps the resulting nulls diagnosable
-    // (the missing-manifest warning's honesty rationale).
-    var gitHung = false
-    def gitLines(cmd: Seq[String]): Option[Seq[String]] = {
-      if (gitHung) return None
-      // stderr DISCARDED, not left on a pipe: an undrained stderr pipe
-      // that fills (git warnings can be verbose in odd cwds) blocks git
-      // before it closes stdout
-      val (out, hung) = BenchGate.boundedLines(() =>
-        new ProcessBuilder(cmd: _*)
-          .redirectError(ProcessBuilder.Redirect.DISCARD).start())
-      if (hung) {
-        gitHung = true
-        System.err.println(s"[bench] git hung (${cmd.mkString(" ")}) — " +
-          "commit/tree_dirty/files_changed/main_changed stamp null for " +
-          "the rest of this run")
-      }
-      out
-    }
-    // ALL repo-relative git questions are anchored to the repo root, not
-    // the launch cwd: 'git status --porcelain -- src/main' from a subdir
-    // exits 0 with EMPTY output (pathspec resolves against the cwd), which
-    // would stamp tree_dirty:false for a dirty tree and files_changed:false
-    // for a touched file — wrong ANSWERS, not the promised null degradation.
-    // The resolved root is only TRUSTED when it has the manifest COMMITTED
-    // at HEAD (cat-file -e, not a working-tree existence check): a launch
-    // cwd inside some UNRELATED repo — even one where a scratch copy of
-    // the tsv lies around untracked — must not get its sha + clean tree
-    // attested as if they identified the measured engine code. No
-    // trustable root → every field null, honestly.
-    val manifestRel = "tools/query_files.tsv"
-    val repoRoot = gitLines(Seq("git", "rev-parse", "--show-toplevel"))
-      .flatMap(_.headOption).map(_.trim).filter(_.nonEmpty)
-      .filter(r => gitLines(
-        Seq("git", "-C", r, "cat-file", "-e", s"HEAD:$manifestRel")).isDefined)
-    def gitAtRoot(cmd: String*): Option[Seq[String]] =
-      repoRoot.flatMap(r => gitLines(Seq("git", "-C", r) ++ cmd))
-    val headCommit = gitAtRoot("rev-parse", "HEAD")
-      .flatMap(_.headOption).map(_.trim).filter(_.matches("[0-9a-f]{7,40}"))
-    // The measured-code surface: engine source PLUS the build definition
-    // (round-14 ADVICE — a dirty build.sbt/project/ still changes the
-    // compiled engine via compiler flags or a Spark-version bump, so a
-    // src/main-only attestation would stamp tree_dirty:false for a tree
-    // whose sha does not identify the measured binary). ONE list feeds
-    // both the tree_dirty attestation and the main_changed diff below —
-    // the two answers must describe the same surface or a future
-    // files_changed:false could demote a build-driven regression.
-    val mainPaths = Seq("src/main", "build.sbt", "project")
-    // dirty = any uncommitted change on the measured-code surface: the
-    // only tree state whose sha still identifies the measured engine
-    // code is a clean one
-    val treeDirty = gitAtRoot(("status" +: "--porcelain" +: "--" +: mainPaths): _*)
-      .map(_.exists(_.trim.nonEmpty))
-    // The DEFAULT manifest is read from the HEAD-COMMITTED blob (git
-    // show), not the working-tree file (round-14 ADVICE): the trust
-    // rationale above is "committed, CI-verified", and a locally
-    // modified uncommitted tsv could otherwise point the diff at the
-    // wrong file and stamp files_changed:false for genuinely touched
-    // code. An explicit SPARK_GRAFT_QUERY_MANIFEST stays a plain
-    // launch-cwd-relative (or absolute) FILE read — it is the caller's
-    // scratch override, outside the attestation contract — and since a
-    // missing explicit path silently costs every files_changed field,
-    // say so on stderr instead of nulling mutely.
-    val manifestEnv = sys.env.get("SPARK_GRAFT_QUERY_MANIFEST")
-    val manifest: Map[String, String] = manifestEnv match {
-      case Some(path) =>
-        if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
-          System.err.println(
-            s"[bench] SPARK_GRAFT_QUERY_MANIFEST=$path does not exist — " +
-              "files_changed will stamp null for every flag")
-        BenchGate.loadManifest(path)
-      case None =>
-        gitAtRoot("show", s"HEAD:$manifestRel")
-          .map(BenchGate.parseManifestLines).getOrElse(Map.empty)
-    }
-    // one diff (plus, on the empty-diff path, up to two existence
-    // queries) per DISTINCT (baseline commit, defining file) pair:
-    // operator files define up to ~20 queries each, so a flag-flood run
-    // would otherwise spawn redundant subprocess groups per flag
-    val diffCache = scala.collection.mutable.Map.empty[(String, String), Option[Boolean]]
-    val mainDiffCache = scala.collection.mutable.Map.empty[String, Option[Boolean]]
-    // ONE traversal computes BOTH change bits per flag from the SAME
-    // baseline line/commit: files_changed and main_changed are the
-    // elimination pair flagVerdict requires to agree, so two separate
-    // loops that each re-derive the baseline could silently
-    // desynchronize under a future edit to one of them.
-    val changeBits: Map[String, (Option[Boolean], Option[Boolean])] =
-      (normRegs.keySet ++ secVetoed.keySet).map { q =>
-        val baseCommit = for {
-          line <- BenchGate.bestNormLine(q, window)
-          commit <- line.commit
-        } yield commit
-        // files_changed: diff against the WORKING TREE, so uncommitted
-        // edits to the defining file count as touched too. An EMPTY diff
-        // is only trusted as "unchanged" when the path exists at the
-        // baseline commit or is TRACKED in the worktree
-        // (BenchGate.diffVerdict, round-14 ADVICE): git diff exits 0
-        // with empty output both for a path that exists in neither tree
-        // AND for an untracked worktree file — a manifest-override path
-        // from a different tree (or a scratch copy lying untracked in
-        // this one) must stamp null, not false.
-        val fc = for {
-          commit <- baseCommit
-          file <- manifest.get(q)
-          changed <- diffCache.getOrElseUpdate((commit, file),
-            BenchGate.diffVerdict(
-              gitAtRoot("diff", "--name-only", commit, "--", file),
-              existsAtCommit =
-                gitAtRoot("cat-file", "-e", s"$commit:$file").isDefined,
-              trackedInTree = gitAtRoot("ls-files", "--error-unmatch",
-                "--", file).isDefined))
-        } yield changed
-        // main_changed (round-14 verdict item 1): files_changed diffs
-        // only the query's DEFINING file, so a regression in a shared
-        // helper (operators/Ops, functions/*, core/Materialize) would
-        // stamp files_changed:false on every flagged consumer — and on a
-        // drift day could demote a real regression to drift_consistent.
-        // One extra diff per DISTINCT baseline commit answers "did
-        // ANYTHING on the measured-code surface change since the
-        // baseline?"; flagVerdict requires BOTH bits false before the
-        // elimination demotion. The diff alone misses UNTRACKED files
-        // (a brand-new src/main source file changes the compiled engine
-        // but is invisible to git diff), so the run's own treeDirty bit
-        // — status --porcelain over the SAME surface, which does list
-        // untracked files — decides first: a dirty surface alone PROVES
-        // the measured code changed, no baseline commit needed (routing
-        // it through the diff chain would stamp null when the baseline
-        // half fails — no commit on the best line, git hung — and a
-        // null lets the demotion fire on visibly modified code).
-        // Dirtiness UNKNOWN (git answered nothing) → null: a surface
-        // that cannot be attested clean cannot attest untouched code.
-        // Empty diff on a clean tree is trustable as false without an
-        // existence check: src/main exists in the worktree of any root
-        // the manifest trust check admitted (this repo), so the diff
-        // always had something to see.
-        val mc = treeDirty match {
-          case Some(true) => Some(true)
-          case None       => None
-          case Some(false) => for {
-            commit <- baseCommit
-            changed <- mainDiffCache.getOrElseUpdate(commit,
-              gitAtRoot(
-                ("diff" +: "--name-only" +: commit +: "--" +: mainPaths): _*)
-                .map(_.exists(_.trim.nonEmpty)))
-          } yield changed
-        }
-        q -> (fc, mc)
-      }.toMap
-    val filesChangedOf: Map[String, Option[Boolean]] =
-      changeBits.map { case (q, (fc, _)) => q -> fc }
-    val mainChangedOf: Map[String, Option[Boolean]] =
-      changeBits.map { case (q, (_, mc)) => q -> mc }
-    val calibStable = BenchGate.calibStable(calibStart, calibEnd)
-    // Uniform-regression tripwire (round-11 ADVICE): the shift-corrected
-    // bar absorbs a registry-wide slowdown by design, so a CALIB-STABLE
-    // run whose median shift clears the documented drift band gets an
-    // explicit warning field instead of relying on the reader to notice.
-    val shiftSuspect = BenchGate.shiftSuspect(normShift, calibStable)
-    // In-run ghost confirmation (round-12 verdict item 1): the start/end
-    // probes cannot see a MID-run load spike (BENCH_r11: q35 flagged at
-    // 10x under calib_stable=true). Re-time each flagged query NOW — a
-    // ghost re-times at its baseline, a real regression reproduces.
-    // Normalization (round 13, superseding the round-12 adjacent-probe
-    // design): the retime divides by THIS RUN'S calibMedian — the same
-    // denominator the flag norms and the history bests use — because
-    // dividing by a freshly-measured fully-warm probe read ~2x the
-    // in-run norm on identical seconds (the q244/q12 inflation). The
-    // per-flag adjacent probe still runs, but as a machine-speed-change
-    // detector: its ratio against the run's own warm end probe scales
-    // the measurement symmetrically (see BenchGate.retimeNorm).
-    // Vetoed entries slower in seconds too, just under the veto bar
-    // (sec_ratio >= 1.2): re-timed like kept flags (round-13 verdict
-    // item 2) with whatever retime budget the kept flags leave — a
-    // flood still cannot double the run's wall-clock, and beyond-budget
-    // entries stamp null = explicitly unadjudicated, never silently ok.
-    val vetoRetime = BenchGate.vetoedNeedingRetime(secVetoed)
-    val retimed: Map[String, (Option[Double], Option[Boolean])] =
-      if (normRegs.isEmpty && vetoRetime.isEmpty) Map.empty
-      else {
-        // Retire the run's accumulated Materialize/localCheckpoint blocks
-        // before re-timing: ~750 query executions leave thousands of
-        // persisted block sets that the ContextCleaner only reclaims on
-        // driver GC, and the resulting memory pressure slows COMPLEX
-        // retimed queries 2-3x while the scan-shaped probe barely feels
-        // it (observed live: ghost flags re-timing at 2-6x their quiet
-        // norms, all at baseline under a fresh-JVM TimeQ). Nothing
-        // references these RDDs anymore — every cross-query memo in the
-        // engine is a parquet DIRECTORY, never an RDD handle.
-        spark.sparkContext.getPersistentRDDs.valuesIterator
-          .foreach(_.unpersist(blocking = false))
-        System.gc()
-        val bar = BenchGate.RatioThreshold * math.max(1.0, normShift)
-        def retimer(q: String): Option[Double] =
-          SparkEntry.queries.get(q).flatMap { fn =>
-            try {
-              // warm-up-discard + probe-after-warm-up + median-of-3
-              // (round-12 verdict item 2 + ADVICE): the harness and its
-              // measured first-iteration rationale live in
-              // BenchGate.retimeNorm, where the planted-inflation spec
-              // can drive it without a SparkSession
-              def run(): Double = {
-                val t0 = System.nanoTime()
-                fn(spark, sfDir).queryExecution.toRdd.count()
-                (System.nanoTime() - t0) / 1e9
-              }
-              // basis = this run's calibMedian (the SAME denominator the
-              // flag norms and history bests use); the adjacent probe is
-              // compared against the run's own warm end probe to credit
-              // any JVM degradation since the run ended — see retimeNorm
-              BenchGate.retimeNorm(() => run(), () => calibProbe()(1),
-                basis = calibMedian, warmRef = calibEnd)
-            } catch { case scala.util.control.NonFatal(_) => None }
+        name -> (1 to iterations).map { _ =>
+          val t0 = System.nanoTime()
+          try { fn(spark, sfDir).queryExecution.toRdd.count(); (System.nanoTime() - t0) / 1e9 }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}"); FailurePenaltySec
           }
-        // kept flags spend the budget first (they cleared BOTH bars);
-        // qualifying vetoed entries get what remains of MaxRetimes
-        val vetoCap = math.max(0,
-          BenchGate.MaxRetimes - math.min(normRegs.size, BenchGate.MaxRetimes))
-        BenchGate.confirm(normRegs, bar, retimer) ++
-          BenchGate.confirm(vetoRetime, bar, retimer, cap = vetoCap)
+        }.sorted
       }
-    def jbool(b: Option[Boolean]): String = b.map(_.toString).getOrElse("null")
-    // retime fields + verdict + files_changed, shared by kept-flag and
-    // sec-vetoed entries — one emitter so the two maps cannot diverge
-    def adjudicationFields(q: String, ratio: Double): String = {
-      val (rn, rc) = retimed.getOrElse(q, (None, None))
-      val fc = filesChangedOf.getOrElse(q, None)
-      val mc = mainChangedOf.getOrElse(q, None)
-      // drift_adjusted_ratio + four-state verdict (round-12 verdict
-      // item 1, round-14 item 2) + files_changed (round-13 item 1) +
-      // main_changed (round-14 item 1): the reader-facing verdict now
-      // performs the full drift-vs-code discrimination that previously
-      // took a judge — see BenchGate.flagVerdict
-      val verdict = BenchGate
-        .flagVerdict(rc, ratio, normShift, calibStable, fc, mc)
-        .map("\"" + _ + "\"").getOrElse("null")
-      ",\"drift_adjusted_ratio\":" + fmt(ratio / math.max(1.0, normShift)) +
-        ",\"retime_norm\":" + rn.map(fmt).getOrElse("null") +
-        ",\"retime_confirmed\":" + jbool(rc) +
-        ",\"files_changed\":" + jbool(fc) +
-        ",\"main_changed\":" + jbool(mc) +
-        ",\"verdict\":" + verdict
-    }
-    def regsJson(regs: Seq[(String, (Double, Double))]): String =
-      regs.map { case (q, (cur, best)) =>
-        "\"" + q + "\":{\"norm\":" + fmt(cur) + ",\"best\":" + fmt(best) +
-          ",\"ratio\":" + fmt(cur / best) +
-          adjudicationFields(q, cur / best) + "}"
-      }.mkString("{", ",", "}")
-    val normRegsJson = regsJson(normRegs.toSeq.sortBy(_._1))
-    // Sec-vetoed flags (report-only honesty, like calib-unstable runs):
-    // entries that cleared the norm bar but whose raw seconds sit under
-    // 1.5x the window's best seconds — the denominator-variance ghost
-    // class. Visible in the FULL artifact so a real regression the veto
-    // masked (narrow machine-got-faster regime) is never silently lost —
-    // and since round 14 the ambiguous slice (sec_ratio >= 1.2) carries
-    // the SAME retime + verdict machinery as a kept flag instead of a
-    // bare map entry a judge must eyeball.
-    val secVetoedJson = secVetoed.toSeq.sortBy(_._1)
-      .map { case (q, (norm, best, secRatio)) =>
-        "\"" + q + "\":{\"norm\":" + fmt(norm) + ",\"best\":" + fmt(best) +
-          ",\"ratio\":" + fmt(norm / best) + ",\"sec_ratio\":" + fmt(secRatio) +
-          adjudicationFields(q, norm / best) + "}"
-      }.mkString("{", ",", "}")
-    // Full-name artifact line (file + history): every query, 3 decimals.
-    val calibFields =
-      s""""calib_start":${fmt(calibStart)},"calib_end":${fmt(calibEnd)},"""
-    def fullLine: String =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" + calibFields +
-        s""""calib_stable":$calibStable,"norm_shift_global":${fmt(normShift)},""" +
-        s""""shift_suspect":$shiftSuspect,"hist_lines":$histLines,"hist_sha":"$histSha",""" +
-        s""""norm_regressions":$normRegsJson,"sec_vetoed":$secVetoedJson,""" +
-        s""""queries":${mapOf(results.toSeq.sortBy(_._1))},"sf":"$sfDir"}"""
-    // The driver records only the LAST ~2000 chars of stdout AND matches
-    // the printed `queries` keys against correctness-artifact query
-    // names — the round-6 short-id self-truncation kept the line inside
-    // the tail but made every key unmatchable, so the driver's parse
-    // returned null for three straight rounds (round-16 verdict item 1).
-    // BenchGate.stdoutLine prints FULL registry names for the slowest
-    // queries that fit the budget (spec-pinned by BenchStdoutSpec); the
-    // per-flag norm/retime detail moved file-only to buy the room — the
-    // stdout keeps the counts plus a compact worst-3 name → verdict map,
-    // and the complete adjudication lives in the file artifact above.
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft-bench.json")
-    val flagVerdicts = normRegs.toSeq
-      .sortBy { case (q, (cur, best)) => (-cur / best, q) }.take(3)
-      .map { case (q, (cur, best)) =>
-        q -> BenchGate.flagVerdict(retimed.getOrElse(q, (None, None))._2,
-          cur / best, normShift, calibStable,
-          filesChangedOf.getOrElse(q, None), mainChangedOf.getOrElse(q, None))
-      }
-    println(BenchGate.stdoutLine(total, calibStart, calibEnd, calibStable,
-      normShift, shiftSuspect, normRegs.size, secVetoed.size, flagVerdicts,
-      results, out, sfDir))
-    try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val noise = Noise(Runtime.getRuntime.availableProcessors, load1Start, load1(),
+      for { s0 <- stealStart; s1 <- stealSec() } yield s1 - s0)
+    val medians = samples.map { case (n, ts) => n -> median(ts) }.toMap
+    println(stdoutLine(medians, out, sfDir))
+    val line = artifactLine(samples, sfDir, noise, System.currentTimeMillis / 1000) + "\n"
+    try Files.write(Paths.get(out), line.getBytes(UTF_8))
     catch { case e: Throwable => System.err.println(s"[bench] file write failed: ${e.getMessage}") }
-    // Append-only history so round-over-round per-query diffs never depend
-    // on driver log tail length: one full-name line per run, stamped with
-    // epoch seconds, medians in "queries" plus per-query "min"/"max" so a
-    // noisy sample is distinguishable from a real shift after the fact.
-    // commit + tree_dirty (round-13 verdict item 1): future runs diff a
-    // flagged query's defining file against its baseline line's commit.
-    // Written only when git answered BOTH questions — a half-attested
-    // line would parse as unusable anyway (parseHistLine requires the
-    // explicit tree_dirty:false), so omit cleanly instead.
-    // attest_paths records WHICH surface tree_dirty judged (round-15
-    // widening): lines without the field were attested against src/main
-    // only, so a pre-r15 tree_dirty:false does not rule out a dirty
-    // build.sbt/project at measurement time. parseHistLine deliberately
-    // still accepts them (rejecting would empty every window on the
-    // widening day, and the existing attested lines were judge-verified
-    // clean-tree) — the field makes the residual auditable per line
-    // instead of invisible; the window rolls the old lines out within
-    // HistoryWindow runs.
-    val commitFields = (for { c <- headCommit; d <- treeDirty }
-      yield s""""commit":"$c","tree_dirty":$d,""" +
-        s""""attest_paths":"${mainPaths.mkString(",")}",""").getOrElse("")
-    val histLine =
-      s"""{"ts":${System.currentTimeMillis / 1000},"metric":"total",""" +
-        s""""value":${fmt(total)},"unit":"sec",""" + calibFields + commitFields +
-        s""""queries":${mapOf(samples.map { case (n, ts) => n -> median(ts) })},""" +
-        s""""min":${mapOf(samples.map { case (n, ts) => n -> ts.head })},""" +
-        s""""max":${mapOf(samples.map { case (n, ts) => n -> ts.last })},""" +
-        s""""calib_median":${fmt(calibMedian)},""" +
-        s""""norm":${mapOf(norms)},""" +
-        s""""sf":"$sfDir"}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get(hist),
-      (histLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+    try Files.write(Paths.get(hist), line.getBytes(UTF_8),
+      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     catch { case e: Throwable => System.err.println(s"[bench] history write failed: ${e.getMessage}") }
     spark.stop()
+  }
+
+  private def median(sorted: Seq[Double]): Double = sorted(sorted.length / 2)
+
+  /** Whether the machine was noisy during the run: its cores, its
+    * 1-minute load average at start and end, and the CPU seconds the host
+    * stole from its virtual CPUs over the run. A reading /proc cannot
+    * give is None and renders as JSON `null`.
+    */
+  final case class Noise(nproc: Int, load1Start: Option[Double],
+                         load1End: Option[Double], stealSec: Option[Double])
+
+  private def readProc[T](path: String)(parse: String => T): Option[T] =
+    try Some(parse(new String(Files.readAllBytes(Paths.get(path)), UTF_8)))
+    catch { case NonFatal(_) => None }
+
+  private def load1(): Option[Double] =
+    readProc("/proc/loadavg")(_.trim.split("\\s+")(0).toDouble)
+
+  /** The `steal` column of /proc/stat's `cpu` line, in USER_HZ ticks,
+    * which Linux fixes at 100 per second for this file. */
+  private def stealSec(): Option[Double] =
+    readProc("/proc/stat")(_.linesIterator.next().trim.split("\\s+")(8).toDouble / 100)
+
+  /** The stdout line must fit the ~2000-char tail of raw stdout that the
+    * driver records. Under sbt that tail also holds the line's `[info] `
+    * prefix and newline and sbt's closing `[success] Total time: 783 s
+    * (13:03), completed Aug 18, 2026, 12:30:30 PM` line (74 chars with its
+    * newline); [[SbtFramingChars]] reserves room for that framing with
+    * margin for longer durations and dates.
+    */
+  val StdoutTailChars = 2000
+  val SbtFramingChars = 200
+  val StdoutLineBudget = StdoutTailChars - SbtFramingChars
+
+  def fmtSec(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  private def fmtOpt(v: Option[Double]): String = v.map(fmtSec).getOrElse("null")
+
+  private def jsonMap(entries: Seq[(String, String)]): String =
+    entries.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+
+  /** The slowest-prefix selection for the stdout `queries` map: entries
+    * are admitted in descending-seconds order until the NEXT rendered
+    * entry ("name":12.345,) would overflow `budget`; stopping at the
+    * first overflow (rather than skipping it and continuing) keeps the
+    * guarantee that every included query is at least as slow as every
+    * excluded one. Returned name-sorted for stable output.
+    */
+  def slowestWithinBudget(results: Map[String, Double],
+                          budget: Int): Seq[(String, Double)] = {
+    var used = 2 // the braces
+    results.toSeq.sortBy { case (k, v) => (-v, k) }
+      .takeWhile { case (k, v) =>
+        val w = k.length + fmtSec(v).length + 4 // quotes + colon + comma
+        val fits = used + w <= budget
+        if (fits) used += w
+        fits
+      }
+      .sortBy(_._1)
+  }
+
+  /** The driver-facing stdout line: the total of `results` (each query's
+    * median seconds), the slowest queries under their FULL registry names
+    * (the driver matches them against the correctness artifact's names) as
+    * far as [[StdoutLineBudget]] allows, the query count, the artifact's
+    * path and the tables' directory.
+    */
+  def stdoutLine(results: Map[String, Double], out: String, sfDir: String): String = {
+    val head =
+      s"""{"metric":"total","value":${fmtSec(results.values.sum)},"unit":"sec","queries":"""
+    val tail = s""","n_queries":${results.size},"full":"$out","sf":"$sfDir"}"""
+    val entries = slowestWithinBudget(results,
+      StdoutLineBudget - head.length - tail.length)
+    head + jsonMap(entries.map { case (k, v) => k -> fmtSec(v) }) + tail
+  }
+
+  /** The one line both the artifact and the history file hold: every
+    * query's median (`queries`), `min` and `max` over its sorted
+    * `samples`, their total, the run's time and tables, and its noise.
+    */
+  def artifactLine(samples: Seq[(String, Seq[Double])], sfDir: String,
+                   noise: Noise, epochSec: Long): String = {
+    def per(stat: Seq[Double] => Double): String =
+      jsonMap(samples.map { case (n, ts) => n -> fmtSec(stat(ts)) })
+    val total = samples.map { case (_, ts) => median(ts) }.sum
+    s"""{"ts":$epochSec,"metric":"total","value":${fmtSec(total)},"unit":"sec",""" +
+      s""""queries":${per(median)},"min":${per(_.head)},"max":${per(_.last)},""" +
+      s""""n_queries":${samples.size},"sf":"$sfDir",""" +
+      s""""noise":{"nproc":${noise.nproc},"load1_start":${fmtOpt(noise.load1Start)},""" +
+      s""""load1_end":${fmtOpt(noise.load1End)},"steal_s":${fmtOpt(noise.stealSec)}}}"""
   }
 }

@@ -4,18 +4,22 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
-/** Stage-level profiler for a single registry query: runs the query N times
-  * and prints per-stage wall time + task counts, so bench outliers (q27/q30)
-  * can be attributed to a concrete stage instead of guessed at. Each
-  * iteration also prints how many classes Spark compiled for it
-  * (`compiled=`, from `CodegenMetrics`): a repeated iteration that still
-  * compiles many is evicting the generated-class cache.
+/** Stage-level profiler for registry queries: runs each query N times in
+  * one warm JVM and prints per-stage wall time + task counts, so bench
+  * outliers (q27/q30) can be attributed to a concrete stage instead of
+  * guessed at. Each iteration prints its full-plan `toRdd.count()` time
+  * and rows, and how many classes Spark compiled for it (`compiled=`, from
+  * `CodegenMetrics`): a repeated iteration that still compiles many is
+  * evicting the generated-class cache, and the later iterations give a
+  * query's warm time without first-run codegen/JIT.
   *
-  * Usage: runMain graft.Profile <queryName> [sfDir] [iters]
+  * Usage: runMain graft.Profile <queryName>[,<queryName>...] [sfDir] [iters]
+  * (sfDir may also be a ScaleSmoke corpus, e.g. /tmp/graft-scale-10x)
   */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val name = args.headOption.getOrElse("q27_ngram_jaccard")
+    val names = args.headOption.getOrElse("q27_ngram_jaccard")
+      .split(",").toSeq.filter(_.nonEmpty)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val iters = if (args.length > 2) args(2).toInt else 2
     val spark = LocalSession()
@@ -36,15 +40,14 @@ object Profile {
     // in-context slowdowns (code-cache pressure, accumulated session
     // state) don't show in isolated runs.
     if (sys.env.contains("SPARK_GRAFT_PROFILE_WARMALL")) {
-      QueryRegistry.all.filter(_.name < name).foreach { spec =>
+      QueryRegistry.all.filter(_.name < names.min).foreach { spec =>
         try spec.run(spark, sfDir).queryExecution.toRdd.count()
         catch { case e: Throwable => println(s"[warm] ${spec.name} failed: ${e.getMessage}") }
       }
       println(s"[warm] done")
     }
 
-    val q = QueryRegistry.byName(name)
-    (1 to iters).foreach { i =>
+    for (name <- names; q = QueryRegistry.byName(name); i <- 1 to iters) {
       stages.synchronized(stages.clear())
       val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()

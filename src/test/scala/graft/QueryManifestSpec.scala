@@ -2,22 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The files_changed stamp (round-13 verdict item 1) is only as honest as
-  * the query→defining-file manifest it reads: a stale entry would diff
-  * the WRONG file and could stamp a genuinely-touched query
-  * `files_changed:false` — manufacturing the machine-by-elimination
-  * verdict for a real code regression. This spec re-runs the generator's
-  * exact scan (first string literal of each `QuerySpec(` call in main
-  * source — the registration idiom every operator file uses) and fails
-  * until the committed tsv matches; `python3 tools/gen_query_manifest.py`
-  * regenerates it. Reads from DISK at runtime, like SourceAuditSpec —
-  * editing source mid-`sbt test` fails on state newer than the compiled
-  * expectations, which is the point.
+/** Every registry query is registered by exactly one `QuerySpec("name", …)`
+  * call in main source. The scan takes the first string literal of each
+  * `QuerySpec(` call, the registration idiom every operator file uses, and
+  * reads from DISK at runtime, like SourceAuditSpec.
   */
 class QueryManifestSpec extends AnyFunSuite {
 
   private val root = java.nio.file.Paths.get(".").toAbsolutePath
-  private val manifestPath = "tools/query_files.tsv"
 
   private def scanPairs(): Seq[(String, String)] = {
     val nameRe = """QuerySpec\(\s*"([A-Za-z0-9_]+)"""".r
@@ -33,48 +25,9 @@ class QueryManifestSpec extends AnyFunSuite {
     }
   }
 
-  private def scan(): Map[String, String] = scanPairs().toMap
-
   test("no query name is registered twice across main source") {
-    // round-14 ADVICE: scan() collapses duplicates via .toMap (last
-    // walk-order wins), so without this assertion only the out-of-CI
-    // generator rejected a second QuerySpec registration of an existing
-    // name — the manifest would silently point at whichever file the
-    // walk visited last, and files_changed would diff the wrong file.
-    // Mirrors gen_query_manifest.py's duplicate check, in CI.
     val dupes = scanPairs().groupBy(_._1).filter(_._2.size > 1)
       .map { case (n, ps) => n -> ps.map(_._2).sorted }
     assert(dupes.isEmpty, s"duplicate QuerySpec registrations: $dupes")
-  }
-
-  test("the committed manifest matches a fresh source scan exactly") {
-    val committed = BenchGate.loadManifest(manifestPath)
-    val scanned = scan()
-    val missing = scanned.keySet -- committed.keySet
-    val stale = committed.keySet -- scanned.keySet
-    val moved = scanned.keySet.intersect(committed.keySet)
-      .filter(q => scanned(q) != committed(q))
-    assert(missing.isEmpty && stale.isEmpty && moved.isEmpty,
-      s"manifest out of date — run python3 tools/gen_query_manifest.py " +
-        s"(missing=$missing stale=$stale moved=$moved)")
-  }
-
-  test("every registry query has a manifest entry pointing at an existing file that defines it") {
-    val committed = BenchGate.loadManifest(manifestPath)
-    QueryRegistry.all.foreach { q =>
-      val file = committed.get(q.name)
-      assert(file.isDefined, s"${q.name}: no manifest entry")
-      val p = root.resolve(file.get)
-      assert(java.nio.file.Files.exists(p), s"${q.name}: ${file.get} missing")
-      val text = new String(java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8)
-      assert(text.contains("\"" + q.name + "\""),
-        s"${q.name}: literal absent from ${file.get}")
-    }
-    // and nothing beyond the registry: the scan is QuerySpec-shaped, so a
-    // manifest larger than the registry means a QuerySpec exists that the
-    // registry does not expose — inventory drift either way
-    assert(committed.size == QueryRegistry.all.size,
-      s"manifest has ${committed.size} entries, registry ${QueryRegistry.all.size}")
   }
 }

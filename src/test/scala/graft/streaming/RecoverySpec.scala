@@ -1,8 +1,10 @@
 package graft.streaming
 
+import java.net.URI
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,6 +14,23 @@ import graft.partition.DefaultPartitioner
 import graft.sink.{JsonFormat, ParquetFormat}
 import graft.sources.LandedFiles
 
+/** A local FS whose `rename` onto the file named by `crashOn` throws a
+  * non-IO error, which the sink does not retry: the task dies after the
+  * file's temp copy is complete and before it takes its final name.
+  */
+class RenameCrashFileSystem extends RawLocalFileSystem {
+  override def getScheme: String = "renamecrash"
+  override def getUri: URI = URI.create("renamecrash:///")
+  override def rename(src: Path, dst: Path): Boolean = {
+    if (RenameCrashFileSystem.crashOn.contains(dst.getName))
+      throw new IllegalStateException(s"crash before renaming $src")
+    super.rename(src, dst)
+  }
+}
+object RenameCrashFileSystem {
+  @volatile var crashOn: Option[String] = None
+}
+
 /** D2/D3/D6 recovery: a file-source streaming query is stopped and
   * restarted against the same checkpoint; already-processed input is not
   * reprocessed, new input lands in new offset-named files, and nothing is
@@ -20,7 +39,8 @@ import graft.sources.LandedFiles
   * (`maxFilesPerTrigger`, the file-source analog of `maxOffsetsPerTrigger`),
   * and a crash between the file commit and the offset commit, for parquet
   * and for json (the latter on the `FileSystem`-based checkpoint manager
-  * `graft.LocalSession` configures).
+  * `graft.LocalSession` configures), and a task that dies between a
+  * parquet file's temp write and its rename.
   */
 class RecoverySpec extends SparkTestBase {
 
@@ -157,5 +177,42 @@ class RecoverySpec extends SparkTestBase {
     // every offset lands exactly once, in order, with its own record
     val lines = files.flatMap(f => Files.readAllLines(out.resolve(f)).asScala)
     assert(lines == (0 until 150).map(o => s"""{"offset":$o,"a":${o * 2}}"""))
+  }
+
+  test("parquet: a task crash between the temp write and its rename replays to the same names, each offset once") {
+    val src = Files.createTempDirectory("graft-rcrash-src")
+    val out = Files.createTempDirectory("graft-rcrash-out")
+    val ckpt = Files.createTempDirectory("graft-rcrash-ckpt")
+    spark.sparkContext.hadoopConfiguration.setClass(
+      "fs.renamecrash.impl", classOf[RenameCrashFileSystem], classOf[FileSystem])
+    val cfg = PipelineConfig(flushSize = 40)
+    def start() = ParityPipeline.start(
+      spark.readStream.schema(recSchema).option("maxFilesPerTrigger", 1).parquet(src.toString),
+      cfg, DefaultPartitioner, ParquetFormat(), s"renamecrash://$out", ckpt.toString,
+      payload = lit(null))
+    val names = Seq(0, 40, 80).map(o => f"topics/r/partition=0/r+0+$o%010d.parquet")
+
+    writeSourceFile(src, 0, 100)
+    RenameCrashFileSystem.crashOn = Some(f"r+0+${40}%010d.parquet")
+    val crashing = start()
+    try intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      crashing.processAllAvailable())
+    finally { crashing.stop(); RenameCrashFileSystem.crashOn = None }
+
+    // the first file took its name; the second exists only as a temp file
+    assert(listFiles(out) == names.take(1))
+    val hidden = Files.list(out.resolve("topics/r/partition=0")).iterator.asScala
+      .map(_.getFileName.toString).filter(_.startsWith(".")).toSeq
+    assert(hidden.exists(n => n.startsWith(f".r+0+${40}%010d.parquet.") && n.endsWith(".tmp")),
+      s"no temp file of the crashed rename among $hidden")
+
+    val q = start()
+    try q.processAllAvailable() finally q.stop()
+
+    assert(listFiles(out) == names)
+    val keys = LandedFiles.readParquet(spark, out.toString)
+      .select("_topic", "_kafka_partition", "offset").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
+    assert(keys.sorted == (0 until 100).map(o => ("r", 0, o.toLong)))
   }
 }
