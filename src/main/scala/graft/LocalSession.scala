@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE definition of the local session every main (Bench, Verify,
-  * Profile, ScaleSmoke, SinkBench, ParityDemo, PlanAudit, ExplainFmt)
+  * Profile, ScaleSmoke, PlanAudit, ExplainFmt, ExplainOne)
   * and the test suites (`SparkTestBase`) run on. Each main used to
   * carry its own copy of this builder block — which is exactly how a
   * scaffold-era `local[4]` default survived a whole round in
@@ -33,6 +33,12 @@ import org.apache.spark.sql.SparkSession
   * one POSIX rename, which is atomic, so the offsets/commits logs keep
   * their exactly-once guarantee; it is also the manager Spark falls back
   * to on stores without a `FileContext` binding.
+  *
+  * Streaming state, where a stream keeps any (`StreamingSpec`'s
+  * watermarked aggregation and `dropDuplicates`), lives in Spark's
+  * default state store provider: the parity sink gets exactly-once from
+  * its checkpointed epochs and deterministic file names, not from
+  * operator state, and no registry query runs a stateful stream.
   *
   * Plan descriptions are capped at 1m characters
   * (`spark.sql.maxPlanStringLength`). Spark builds a description of the
@@ -87,21 +93,6 @@ import org.apache.spark.sql.SparkSession
 object LocalSession {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
-  /** Streaming state store provider. Default is RocksDB, NOT the
-    * HDFS-backed in-memory default: the stateful ops
-    * (`streaming/StatefulOps.scala`) keep per-key MinHash bucket FIFOs /
-    * funnel machines / champions, and the in-memory provider holds every
-    * key's state on-heap per executor — at 100× the near-dup bucket map is
-    * the first thing to blow the heap. RocksDB keeps the working set
-    * off-heap with spill-to-disk, so state capacity scales with disk, not
-    * heap. Sizing: streamingNearDup state ≈ (16 bands × maxBucket × 8 B
-    * doc-ids + 64×8 B signature) ≈ 1 KiB/doc at maxBucket=10 → 1 M tracked
-    * docs ≈ 1 GiB per executor — fine on disk, fatal on a shared heap.
-    * Override (e.g. back to HDFS for tiny tests) via SPARK_GRAFT_STATE_STORE.
-    */
-  def stateStoreProvider: String = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE",
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
   val CheckpointFileManager =
     "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 
@@ -114,7 +105,6 @@ object LocalSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass", stateStoreProvider)
       .config("spark.sql.streaming.checkpointFileManagerClass", CheckpointFileManager)
       .config("spark.sql.maxPlanStringLength", "1m")
       .config("spark.sql.codegen.cache.maxEntries", "1000")

@@ -109,7 +109,7 @@ object ScaleSmoke {
       "q239_cluster_nmi", "q240_kdist_profile", "q241_ams_f2_audit",
       "q243_dedup_savings",
       // media codecs run from documents too (round 13: previously only
-      // TimeQ'd at 10x; in the sweep so future scale runs cover them)
+      // timed singly at 10x; in the sweep so future scale runs cover them)
       "q249_png_pixel_decode", "q250_wav_pcm_decode")
     println(s"== corpus ${nDocs * mult} docs / ${nEmb * mult} vectors, 16 files each ==")
     // Local-iteration filter (builder tooling, mirrors Verify's):

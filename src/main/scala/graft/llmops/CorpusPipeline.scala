@@ -297,7 +297,7 @@ object CorpusPipeline {
     * or they correlate perfectly — e.g. a corpus sampled at rate 0.5 by
     * unsalted hash, then split train/val/test by the same unsalted hash,
     * puts every sampled doc in train (hash < 0.5 < 0.8). Found live by
-    * CurateDemo composing q61-style sampling with q79's split; q79 salts
+    * composing q61-style sampling with q79's split; q79 salts
     * with "split" for exactly this reason. DuckDB spelling:
     * `substr(md5(CAST(id AS VARCHAR) || ':salt'), 1, 8)`.
     */
@@ -543,7 +543,7 @@ object CorpusPipeline {
     * training dataset publishes with each release. The compare runs on
     * content FINGERPRINTS (32 B), not text, so the full-outer join
     * shuffles two narrow (doc_id, fp) streams; with both snapshots
-    * bucketed by doc_id (`operators/Bucketing.scala`) it is shuffle-free
+    * bucketed by doc_id (Spark's `bucketBy`) it is shuffle-free
     * entirely. 100 TB shape: one co-partitioned join, no text movement.
     */
   def corpusDiff(a: DataFrame, b: DataFrame): DataFrame = {

@@ -256,7 +256,7 @@ object CorpusSim {
       // (Round-16 decomposition of the round-15 reverted experiment,
       // verdict item 2: the r15 attempt bundled a window-df rewrite AND
       // Materialize(lists) and was reverted wholesale on a noisy ~10s
-      // reading. Measured SEPARATELY this round in adjacent TimeQ
+      // reading. Measured SEPARATELY this round in adjacent timing
       // windows: Materialize(lists) alone reads 9.95/11.93 s warm vs
       // 5.58/5.75 s for this join form — the checkpoint of the per-doc
       // ARRAY table (corpus-wide shingle arrays serialized to block

@@ -781,7 +781,7 @@ object Dedup {
     * sampling uses the unsalted hash of the same ids, and an unsalted
     * split would correlate perfectly with it — every rate-r-sampled doc
     * would land in train (see [[CorpusPipeline.hashFrac]]'s salted
-    * overload; caught live by CurateDemo).
+    * overload; caught live by a pipeline that sampled, then split).
     */
   def leakageFreeSplit(docs: DataFrame, trainCut: Double = 0.8,
                        valCut: Double = 0.9): DataFrame = {

@@ -150,9 +150,8 @@ object IncrementalDedup {
     * STATELESS (no watermark, no state store). The stream carries
     * (doc_id, sig) — signatures are per-row streaming-computable only if
     * produced upstream ([[Dedup.minhashSignatures]] needs windows, which
-    * streaming forbids; compute sigs at the producer or in foreachBatch,
-    * as [[graft.streaming.StatefulOps.streamingNearDup]]'s SketchedDoc
-    * contract already does). The stream's own signature rides THROUGH
+    * streaming forbids; compute sigs at the producer or in foreachBatch).
+    * The stream's own signature rides THROUGH
     * the band explode so the stream is never self-joined (a stream-stream
     * join would demand watermarks); a pair colliding in several bands
     * emits one row per band — flag-and-drop consumers are idempotent to

@@ -67,8 +67,7 @@ class SourceAuditSpec extends AnyFunSuite {
       "— batch-bounded by admission control"),
     "Bench.scala" -> (2, "bench warm-up probes (tooling main, not an " +
       "operator)"),
-    "Profile.scala" -> (1, "profiling tool main"),
-    "CurateDemo.scala" -> (2, "demo main"))
+    "Profile.scala" -> (1, "profiling tool main"))
 
   /** file → reviewed `crossJoin(` occurrence count. The class argument,
     * once for all entries: every production crossJoin here pairs a 1-row
@@ -158,11 +157,6 @@ class SourceAuditSpec extends AnyFunSuite {
       "the round-11 CorpusStats split)"),
     "llmops/FeatureStats.scala" -> (1, "per-doc (df, shingle) list for " +
       "the rarity-ordered prefix — doc-length-bounded"),
-    "streaming/StatefulOps.scala" -> (2, "session-scoped: batch form " +
-      "pre-filters rn <= 8 BEFORE the agg (list ≤ 8 structs); streaming " +
-      "form is session_window-scoped — gap × per-user arrival rate " +
-      "within the watermark horizon — and slice-capped to 8 at emission " +
-      "(1 scaladoc mention)"),
     "operators/Extras.scala" -> (2, "q44 string_agg parity: per-nation " +
       "name list is SF-PROPORTIONAL by string_agg's own SQL semantics — " +
       "the one reviewed corpus-proportional array agg; safe only under " +

@@ -106,7 +106,7 @@ class SamplingSpec extends SparkTestBase {
     val docs = graft.Tables.documents(spark, sf("sf0.001"))
     // sample at 0.5 by the UNSALTED hash (the q61 idiom), then split the
     // survivors: with an unsalted split hash every sampled doc satisfies
-    // hash < 0.5 < 0.8 and lands in train (caught live by CurateDemo);
+    // hash < 0.5 < 0.8 and lands in train (caught live by a sample-then-split run);
     // the salted split must still produce all three splits
     val sampled = docs.filter(
       CorpusPipeline.hashFrac(col("doc_id")) < CorpusPipeline.rateCutoffHex(0.5))

@@ -109,18 +109,31 @@ class SinkSpec extends SparkTestBase {
     assert(res.offsetsToCommit == Map(("test", 0) -> 1000L, ("test", 1) -> 1000L))
   }
 
-  test("json: replay writes byte-identical files (D3 idempotency)") {
-    val base = tmpDir()
+  test("json and bytes (plain and gzip): replay writes byte-identical files (D3)") {
     val cfg = PipelineConfig(flushSize = 250)
     val df = kafkaRecords("t", nParts = 1, perPart = 600)
-    def run() = OffsetNamedSink.writeBatch(
-      df, cfg, DefaultPartitioner, JsonFormat(), base.toString,
-      payload = to_json(struct(col("a"), col("b"))))
-    run()
-    val firstBytes = listFiles(base).map(f => f -> Files.readAllBytes(base.resolve(f)).toSeq).toMap
-    run() // replay — same batch, same data
-    val secondBytes = listFiles(base).map(f => f -> Files.readAllBytes(base.resolve(f)).toSeq).toMap
-    assert(firstBytes == secondBytes)
+      .withColumn("value", encode(concat(lit("payload-"), col("offset")), "UTF-8"))
+    val json = to_json(struct(col("a"), col("b")))
+    Seq[(OutputFormat, org.apache.spark.sql.Column, String)](
+      (JsonFormat(), json, ".json"),
+      (JsonFormat(Gzip), json, ".json.gz"),
+      (ByteArrayFormat(), col("value"), ".bin"),
+      (ByteArrayFormat(compression = Gzip), col("value"), ".bin.gz")).foreach {
+      case (format, payload, ext) =>
+        val base = tmpDir()
+        def run(): Map[String, Seq[Byte]] = {
+          OffsetNamedSink.writeBatch(df, cfg, DefaultPartitioner, format,
+            base.toString, payload = payload)
+          listFiles(base).map(f => f -> Files.readAllBytes(base.resolve(f)).toSeq).toMap
+        }
+        val first = run()
+        val second = run() // replay — same batch, same data, same directory
+        assert(first.keySet == Set(0, 250, 500).map(o => f"topics/t/partition=0/t+0+$o%010d$ext"),
+          s"$ext: ${first.keySet}")
+        val changed = first.keys.filter(f => second(f) != first(f))
+        assert(second.keySet == first.keySet && changed.isEmpty,
+          s"$ext: replay changed the bytes of $changed")
+    }
   }
 
   test("bytearray: custom separator, byte-exact round trip, gzip variant") {
