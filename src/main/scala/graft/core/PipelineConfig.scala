@@ -4,7 +4,7 @@ package graft.core
   * (`OSSSinkConnectorConfiguration.java:66-86` + storage-common keys read at
   * `TopicPartitionWriter.java:107-137`) re-expressed as a typed case class.
   * No reflection plug-ins: formats and partitioners are sealed-trait
-  * registries ([[graft.format.OutputFormat]], [[graft.partition.Partitioner]]).
+  * registries ([[graft.sink.OutputFormat]], [[graft.partition.Partitioner]]).
   */
 final case class PipelineConfig(
     /** `flush.size`: commit a file every N records per encoded partition

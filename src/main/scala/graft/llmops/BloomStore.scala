@@ -33,8 +33,8 @@ import graft.operators.Ops.asciiLowerSql
   * Bloom store cannot do — rebuild or a counting filter are the cures.)
   *
   * Store layout: `words.parquet` (word_idx, bits) ≤ 128 rows;
-  * `meta.parquet` (m_bits, k_hashes). Commits use [[CardinalityStore]]'s
-  * crash-narrowed rename-aside swap.
+  * `meta.parquet` (m_bits, k_hashes). Commits use the
+  * crash-narrowed rename-aside [[StoreCommit.swap]].
   *
   * Scale shape: a production filter for 10⁹ keys at 1% fpp is m ≈ 2³³
   * bits ≈ 2²⁸ words — a few hundred MB as a parquet table, shuffled only
@@ -94,7 +94,7 @@ object BloomStore {
   def update(spark: SparkSession, dir: String, batch: DataFrame): Unit = {
     updatedWords(spark, dir, batch)
       .write.mode("overwrite").parquet(s"$dir/words.parquet.tmp")
-    swap(spark, s"$dir/words.parquet")
+    StoreCommit.swap(spark, s"$dir/words.parquet")
   }
 
   /** Probe: for each key in `keys`, TRUE iff all k positions are set in
@@ -123,21 +123,6 @@ object BloomStore {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) update(batch.sparkSession, dir, batch)
       }
-
-  /** [[CardinalityStore]]'s crash-narrowed rename-aside commit. */
-  private def swap(spark: SparkSession, dstPath: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(dstPath)
-    val tmp = new org.apache.hadoop.fs.Path(dstPath + ".tmp")
-    val old = new org.apache.hadoop.fs.Path(dstPath + ".old")
-    val fs = dst.getFileSystem(conf)
-    fs.delete(old, true)
-    if (fs.exists(dst) && !fs.rename(dst, old))
-      throw new java.io.IOException(s"BloomStore: rename $dst -> $old failed")
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"BloomStore: rename $tmp -> $dst failed")
-    fs.delete(old, true)
-  }
 
   // ------------------------------------------------------------- store dir
   private val builtFor = scala.collection.concurrent.TrieMap.empty[String, String]

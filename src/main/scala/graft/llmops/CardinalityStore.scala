@@ -25,8 +25,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * CardinalityStoreSpec asserts, alongside idempotence and monotonicity.
   *
   * Store layout: `sketches.parquet` (event_type, sketch BINARY).
-  * Commits use the tmp-rename swap ([[IncrementalDedup.compactStore]]'s
-  * idiom — never overwrite a path being read).
+  * Commits use the rename-aside [[StoreCommit.swap]] (never overwrite a
+  * path being read).
   */
 object CardinalityStore {
 
@@ -58,29 +58,13 @@ object CardinalityStore {
           .as("sketch"))
   }
 
-  /** Committing increment. The swap renames the live store ASIDE first
-    * (dst → dst.old, tmp → dst, delete dst.old) rather than delete-then-
-    * rename, so the store path is never absent mid-commit: a crash before
-    * the tmp→dst rename leaves dst.old intact for manual promotion, and a
-    * crash after it leaves only a stale dst.old to sweep. (Plain-FS
-    * renames aren't transactional, so this is crash-narrowed, not atomic;
-    * concurrent readers on object stores should still tolerate a listing
-    * race.)
+  /** Committing increment, published by the rename-aside
+    * [[StoreCommit.swap]] so the store path is never absent mid-commit.
     */
   def update(spark: SparkSession, dir: String, batch: DataFrame): Unit = {
     updatedSketches(spark, dir, batch)
       .write.mode("overwrite").parquet(s"$dir/sketches.parquet.tmp")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(s"$dir/sketches.parquet")
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/sketches.parquet.tmp")
-    val old = new org.apache.hadoop.fs.Path(s"$dir/sketches.parquet.old")
-    val fs = dst.getFileSystem(conf)
-    fs.delete(old, true)
-    if (fs.exists(dst) && !fs.rename(dst, old))
-      throw new java.io.IOException(s"CardinalityStore: rename $dst -> $old failed")
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"CardinalityStore: rename $tmp -> $dst failed")
-    fs.delete(old, true)
+    StoreCommit.swap(spark, s"$dir/sketches.parquet")
   }
 
   /** (event_type, est_users) read off the store — the O(K) dashboard

@@ -158,9 +158,9 @@ object ClusterStore {
     storeSide.unionByName(newlyIncident)
   }
 
-  /** Committing increment: land the batch's labels and grams. Labels swap
-    * via the [[IncrementalDedup.compactStore]] tmp-rename idiom (never an
-    * in-place overwrite of a path being read); grams append un-recapped —
+  /** Committing increment: land the batch's labels and grams. Labels are
+    * published by the rename-aside [[StoreCommit.swap]] (never an in-place
+    * overwrite of a path being read); grams append un-recapped —
     * [[compact]] restores the cap.
     */
   def update(spark: SparkSession, dir: String, batch: DataFrame): Unit = {
@@ -168,13 +168,7 @@ object ClusterStore {
       .write.mode("overwrite").parquet(s"$dir/labels.parquet.tmp")
     grams(batch).select("doc_id", "shingle")
       .write.mode("append").parquet(s"$dir/grams.parquet")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(s"$dir/labels.parquet")
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/labels.parquet.tmp")
-    val fs = dst.getFileSystem(conf)
-    fs.delete(dst, true)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"ClusterStore: rename $tmp -> $dst failed")
+    StoreCommit.swap(spark, s"$dir/labels.parquet")
   }
 
   /** Store maintenance: full rebuild over the landed corpus (restores the
@@ -187,7 +181,7 @@ object ClusterStore {
     * (shingle assembly needs a doc-local window, unsupported on an
     * unbounded stream; the label commit is store-grain, not row-grain).
     * Each micro-batch runs ONE contract–solve–expand increment and lands
-    * atomically via the tmp-rename swap, so a stream of N batches commits
+    * via the rename-aside swap, so a stream of N batches commits
     * exactly the state the N-step batch chain commits — streaming vs batch
     * labels are definitionally identical, and ClusterStoreSpec asserts the
     * stronger form: store == cold full recompute after EVERY epoch.

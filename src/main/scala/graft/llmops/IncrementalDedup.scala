@@ -105,9 +105,9 @@ object IncrementalDedup {
     * between the two swaps the store is semantically consistent (an
     * un-recapped bucket table only over-generates candidates; the
     * verify stage filters them) and a re-run converges — compaction is
-    * idempotent. The swap itself is delete-then-rename (object-store FSes
-    * have no atomic replace), so a crash between the delete and the rename
-    * leaves dst missing with the completed rewrite stranded in `.tmp`; the
+    * idempotent. Each swap is [[StoreCommit.swap]] (object-store FSes
+    * have no atomic replace), so a crash between its two renames leaves
+    * dst missing with the completed rewrite stranded in `.tmp`; the
     * recovery pre-step below rolls that forward (tmp holds a full
     * compacted table — renaming it into place restores the store) before
     * any read, so the re-run converges instead of failing on a missing
@@ -123,14 +123,6 @@ object IncrementalDedup {
       if (!fs.exists(dst) && fs.exists(tmp) && !fs.rename(tmp, dst))
         throw new java.io.IOException(s"compactStore: recovery $tmp -> $dst failed")
     }
-    def swap(name: String): Unit = {
-      val dst = new org.apache.hadoop.fs.Path(s"$dir/$name")
-      val tmp = new org.apache.hadoop.fs.Path(s"$dir/$name.tmp")
-      val fs = dst.getFileSystem(conf)
-      fs.delete(dst, true)
-      if (!fs.rename(tmp, dst))
-        throw new java.io.IOException(s"compactStore: rename $tmp -> $dst failed")
-    }
     recover("fingerprints.parquet")
     recover("buckets.parquet")
     spark.read.parquet(s"$dir/fingerprints.parquet")
@@ -140,8 +132,8 @@ object IncrementalDedup {
         spark.read.parquet(s"$dir/buckets.parquet"),
         maxBucket, col("band_idx"), col("band_hash"))
       .write.mode("overwrite").parquet(s"$dir/buckets.parquet.tmp")
-    swap("fingerprints.parquet")
-    swap("buckets.parquet")
+    StoreCommit.swap(spark, s"$dir/fingerprints.parquet")
+    StoreCommit.swap(spark, s"$dir/buckets.parquet")
   }
 
   /** STREAMING near-dup increment: arriving docs' band hashes join the

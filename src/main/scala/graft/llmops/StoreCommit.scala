@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Single-rename atomic commit for MULTI-FILE persisted stores.
   *
-  * The per-file rename-aside swap ([[CardinalityStore]]) is sound for a
+  * The per-file rename-aside [[swap]] is sound for a
   * single-file idempotent store, but a store whose state spans several
   * files (counters + meta) committed by SEPARATE swaps has a torn-commit
   * window: a crash between the two swaps leaves counters including a
@@ -67,6 +67,27 @@ object StoreCommit {
       throw new java.io.IOException(s"StoreCommit: rename $state -> $old failed")
     if (!fs.rename(next, state))
       throw new java.io.IOException(s"StoreCommit: rename $next -> $state failed")
+    fs.delete(old, true)
+  }
+
+  /** Single-file commit: publish `dstPath.tmp` as `dstPath`. The live path
+    * is renamed ASIDE first (dst → dst.old, tmp → dst, delete dst.old)
+    * rather than deleted, so it is never absent mid-commit: a crash before
+    * the tmp→dst rename leaves dst.old intact for manual promotion, and a
+    * crash after it leaves only a stale dst.old to sweep. (Plain-FS renames
+    * aren't transactional, so this is crash-narrowed, not atomic;
+    * concurrent readers on object stores should still tolerate a listing
+    * race.)
+    */
+  def swap(spark: SparkSession, dstPath: String): Unit = {
+    val dst = new Path(dstPath)
+    val (tmp, old) = (new Path(dstPath + ".tmp"), new Path(dstPath + ".old"))
+    val fs = fsOf(spark, dst)
+    fs.delete(old, true)
+    if (fs.exists(dst) && !fs.rename(dst, old))
+      throw new java.io.IOException(s"StoreCommit: rename $dst -> $old failed")
+    if (!fs.rename(tmp, dst))
+      throw new java.io.IOException(s"StoreCommit: rename $tmp -> $dst failed")
     fs.delete(old, true)
   }
 }

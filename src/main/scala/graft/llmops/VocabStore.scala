@@ -27,7 +27,7 @@ import graft.operators.Ops.{asciiLower, asciiLowerSql, fanOut}
   * small fraction of the data it summarizes at any scale.
   *
   * Store layout: `terms.parquet` (term, first_id). Commits use
-  * [[CardinalityStore.update]]'s crash-narrowed rename-aside swap.
+  * the crash-narrowed rename-aside [[StoreCommit.swap]].
   */
 object VocabStore {
 
@@ -56,24 +56,13 @@ object VocabStore {
           coalesce(col("new_first"), col("old_first"))).as("first_id"))
   }
 
-  /** Committing increment — [[CardinalityStore.update]]'s rename-aside
-    * swap verbatim: dst → dst.old, tmp → dst, delete dst.old, so the
-    * store path is never absent mid-commit.
+  /** Committing increment, published by the rename-aside
+    * [[StoreCommit.swap]] so the store path is never absent mid-commit.
     */
   def update(spark: SparkSession, dir: String, batch: DataFrame): Unit = {
     updatedTerms(spark, dir, batch)
       .write.mode("overwrite").parquet(s"$dir/terms.parquet.tmp")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(s"$dir/terms.parquet")
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/terms.parquet.tmp")
-    val old = new org.apache.hadoop.fs.Path(s"$dir/terms.parquet.old")
-    val fs = dst.getFileSystem(conf)
-    fs.delete(old, true)
-    if (fs.exists(dst) && !fs.rename(dst, old))
-      throw new java.io.IOException(s"VocabStore: rename $dst -> $old failed")
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"VocabStore: rename $tmp -> $dst failed")
-    fs.delete(old, true)
+    StoreCommit.swap(spark, s"$dir/terms.parquet")
   }
 
   /** The dashboard read: what fraction of the batch's distinct terms are

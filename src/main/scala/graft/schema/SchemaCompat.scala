@@ -74,13 +74,18 @@ object SchemaCompat {
     * columns, fill missing columns with the field's default (from metadata
     * key "default") or null — all as Catalyst expressions.
     */
-  def project(df: DataFrame, target: StructType): DataFrame = {
-    val present = df.schema.fieldNames.toSet
-    val cols: Seq[Column] = target.fields.toSeq.map { f =>
-      if (present.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else defaultFor(f).as(f.name)
+  def project(df: DataFrame, target: StructType): DataFrame =
+    df.select(projectFields(df.schema, target)(col): _*)
+
+  /** E2's per-field rule for a record of schema `from` whose field `name`
+    * reads as `field(name)`: each `target` field is the present field cast
+    * to its type, else its default, else a typed null.
+    */
+  def projectFields(from: StructType, target: StructType)(field: String => Column): Seq[Column] = {
+    val present = from.fieldNames.toSet
+    target.fields.toSeq.map { f =>
+      (if (present.contains(f.name)) field(f.name).cast(f.dataType) else defaultFor(f)).as(f.name)
     }
-    df.select(cols: _*)
   }
 
   private def defaultFor(f: StructField): Column = {

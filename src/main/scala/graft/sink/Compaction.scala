@@ -19,7 +19,7 @@ import graft.sources.LandedFiles
   *     spec asserts set equality, and parquet re-encoding is lossless).
   *   - NAMING (D1): outputs use the same
   *     `<topic><delim><partition><delim><paddedStartOffset>.parquet`
-  *     scheme via the same [[OffsetNamedSink.writeBatchParquet]] writer,
+  *     scheme via the same [[OffsetNamedSink.writeBatch]] writer,
   *     so readers ([[LandedFiles]]) parse provenance identically and a
   *     file's name still pins its first offset.
   *   - IDEMPOTENCE (D3): group membership is a pure function of
@@ -91,8 +91,8 @@ object Compaction {
     val inputSnapshot = landed.inputFiles
       .map(u => new Path(new java.net.URI(u)).toUri.getPath).toSet
 
-    val result = OffsetNamedSink.writeBatchParquet(
-      landed, cfg, partitioner, format, baseDir, payloadCols, extractor)
+    val result = OffsetNamedSink.writeBatch(
+      landed, cfg, partitioner, format, baseDir, struct(payloadCols.map(col): _*), extractor)
 
     val root = new Path(baseDir, cfg.topicsDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -42,13 +42,16 @@ sealed trait OutputFormat {
   def extension: String = baseExtension
 }
 
+/** F1–F3: a file is one byte stream that each record is appended to. */
+sealed trait StreamedFormat extends OutputFormat
+
 /** F1: one JSON document per record + line separator
   * (`JsonRecordWriterProvider.java:71-85`). The payload column must already
   * be a JSON string (`to_json(struct(...))` for Struct values — the
   * `JsonConverter(schemas.enable=false)` analog — or the raw string for
   * schemaless records).
   */
-final case class JsonFormat(compression: Compression = NoCompression) extends OutputFormat {
+final case class JsonFormat(compression: Compression = NoCompression) extends StreamedFormat {
   val baseExtension = ".json"
   override def extension: String = baseExtension + compression.ext
   val lineSeparator: Array[Byte] = "\n".getBytes("UTF-8")
@@ -61,7 +64,7 @@ final case class JsonFormat(compression: Compression = NoCompression) extends Ou
 final case class ByteArrayFormat(
     separator: Array[Byte] = "\n".getBytes("UTF-8"),
     ext: String = ".bin",
-    compression: Compression = NoCompression) extends OutputFormat {
+    compression: Compression = NoCompression) extends StreamedFormat {
   val baseExtension: String = ext
   override def extension: String = baseExtension + compression.ext
 }
@@ -70,7 +73,7 @@ final case class ByteArrayFormat(
   * (`AvroRecordWriterProvider.java:57-111`). Rows are converted to
   * `GenericRecord` with [[AvroSupport]].
   */
-final case class AvroFormat(codec: String = "null") extends OutputFormat {
+final case class AvroFormat(codec: String = "null") extends StreamedFormat {
   val baseExtension = ".avro"
   def codecFactory: CodecFactory = codec match {
     case "null" | "" => CodecFactory.nullCodec()
@@ -83,7 +86,7 @@ final case class AvroFormat(codec: String = "null") extends OutputFormat {
 
 /** F4/F5: Parquet at rest. Written by Spark's own parquet writer factory
   * to a hidden temp file in the target directory, then renamed in the
-  * task to its offset name (see [[OffsetNamedSink.writeBatchParquet]])
+  * task to its offset name (see [[OffsetNamedSink.writeBatch]])
   * — the Spark-first replacement for `AvroParquetWriter`
   * (`ParquetAvroRecordWriterProvider.java:78-87`). The F5 JSON→schema path
   * is `from_json(value, schema)` upstream: Spark's `StructType` replaces

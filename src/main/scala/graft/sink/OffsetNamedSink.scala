@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{NullType, StructType}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.util.SerializableConfiguration
 
@@ -93,13 +93,11 @@ object OffsetNamedSink {
   private val OffsetCol = 7
   private val PayloadCol = 8
 
-  /** Byte-writer path (JSON F1 / ByteArray F2 / Avro F3): each file's rows
-    * are appended in offset order through a Hadoop FS stream — the
-    * executor-side analog of `RecordWriter.write`, one open stream at a
-    * time per task.
-    *
-    * `payload` must be: a string column (JSON), a binary column
-    * (ByteArray), or a struct column (Avro).
+  /** The sink's one write entry. `payload` is a string column (JSON), a
+    * binary column (ByteArray), a struct column (Avro), or for parquet a
+    * struct column whose fields become the file's columns, or `lit(null)`
+    * for the whole row. Names and `offsetsToCommit` come from `df`'s own
+    * `topic`/`partition`/`offset`, whatever fields the payload carries.
     */
   def writeBatch(
       df: DataFrame,
@@ -109,16 +107,31 @@ object OffsetNamedSink {
       baseDir: String,
       payload: Column,
       extractor: TimestampExtractor = RecordTimestamp,
-      extraGroupCols: Seq[Column] = Nil): BatchResult = {
-    require(!format.isInstanceOf[ParquetFormat], "use writeBatchParquet for parquet")
-    val rows = prepare(df, cfg, partitioner, extractor, extraGroupCols, Seq(payload))
-    val structType = rows.schema(PayloadCol).dataType match {
-      case st: StructType => st
-      case _ => null
+      extraGroupCols: Seq[Column] = Nil): BatchResult =
+    format match {
+      case p: ParquetFormat =>
+        val fields = df.select(payload).schema.head.dataType match {
+          case st: StructType => st.fieldNames.toSeq.map(f => payload.getField(f).as(f))
+          case NullType => df.columns.toSeq.map(col)
+          case other => throw new IllegalArgumentException(
+            s"parquet payload must be a struct column or lit(null), got $other")
+        }
+        landParquet(prepare(df, cfg, partitioner, extractor, extraGroupCols, fields), cfg, p, baseDir)
+      case s: StreamedFormat =>
+        landStreamed(prepare(df, cfg, partitioner, extractor, extraGroupCols, Seq(payload)), cfg, s, baseDir)
     }
-    val conf = new SerializableConfiguration(df.sparkSession.sparkContext.hadoopConfiguration)
+
+  /** Byte-writer path (JSON F1 / ByteArray F2 / Avro F3): each file's rows
+    * are appended in offset order through a Hadoop FS stream — the
+    * executor-side analog of `RecordWriter.write`, one open stream at a
+    * time per task. Null payloads (Kafka tombstones) are skipped, and
+    * `records` counts only the rows actually written.
+    */
+  private def landStreamed(rows: DataFrame, cfg: PipelineConfig, format: StreamedFormat,
+                           baseDir: String): BatchResult = {
+    val structType = Some(rows.schema(PayloadCol).dataType).collect { case st: StructType => st }.orNull
+    val conf = new SerializableConfiguration(rows.sparkSession.sparkContext.hadoopConfiguration)
     val (attempts, backoffMs) = (cfg.writeMaxAttempts, cfg.retryBackoffMs)
-    // records = payload rows actually written: tombstones are skipped
     land(rows, cfg, format.extension, countNulls = false) { () =>
       var fs: FileSystem = null
       var avroSchema: org.apache.avro.Schema = null
@@ -138,7 +151,6 @@ object OffsetNamedSink {
             case a: AvroFormat =>
               if (avroSchema == null) avroSchema = AvroSupport.toAvroSchema(structType)
               avro = AvroSupport.containerWriter(raw, avroSchema, a.codecFactory, path)
-            case _: ParquetFormat => ()
           }
           fileRows.foreach { r =>
             // null payloads (Kafka tombstones) are skipped, not written —
@@ -151,7 +163,6 @@ object OffsetNamedSink {
               case _: AvroFormat =>
                 val rec = toRow(r.getStruct(PayloadCol, structType.length)).asInstanceOf[Row]
                 avro.append(AvroSupport.toGenericRecord(rec, structType, avroSchema))
-              case _: ParquetFormat => ()
             }
           }
         } finally {
@@ -187,20 +198,12 @@ object OffsetNamedSink {
     * confs). Every row is a record: `records` counts null payload fields
     * too.
     */
-  def writeBatchParquet(
-      df: DataFrame,
-      cfg: PipelineConfig,
-      partitioner: Partitioner,
-      format: ParquetFormat,
-      baseDir: String,
-      payloadCols: Seq[String],
-      extractor: TimestampExtractor = RecordTimestamp,
-      extraGroupCols: Seq[Column] = Nil): BatchResult = {
-    val rows = prepare(df, cfg, partitioner, extractor, extraGroupCols, payloadCols.map(col))
+  private def landParquet(rows: DataFrame, cfg: PipelineConfig, format: ParquetFormat,
+                          baseDir: String): BatchResult = {
     val dataSchema = StructType(rows.schema.fields.drop(PayloadCol))
     val options = Map("compression" -> format.codec)
-    val job = Job.getInstance(df.sparkSession.sessionState.newHadoopConfWithOptions(options))
-    val factory = new ParquetFileFormat().prepareWrite(df.sparkSession, job, options, dataSchema)
+    val job = Job.getInstance(rows.sparkSession.sessionState.newHadoopConfWithOptions(options))
+    val factory = new ParquetFileFormat().prepareWrite(rows.sparkSession, job, options, dataSchema)
     val conf = new SerializableConfiguration(job.getConfiguration)
     val payloadRefs: Seq[Expression] = dataSchema.fields.toSeq.zipWithIndex.map { case (f, i) =>
       BoundReference(PayloadCol + i, f.dataType, f.nullable)

@@ -30,8 +30,7 @@ import graft.sink._
   *   - R4 wallclock rotation → timezone-day-aligned scheduled drains
   *     ([[startScheduled]] / [[RotationSchedule]],
   *     `rotate.schedule.interval.ms`, `TopicPartitionWriter.java:359-384`);
-  *     [[start]] keeps the simpler continuous `Trigger.ProcessingTime`
-  *     cadence for pipelines that don't need day alignment
+  *     [[start]] runs continuously and takes no schedule
   */
 object ParityPipeline {
 
@@ -64,7 +63,8 @@ object ParityPipeline {
 
   /** Start the streaming parity sink. `payload` is the serialized-record
     * column (see [[OffsetNamedSink.writeBatch]]); `format` picks the
-    * writer. Exactly-once: checkpoint + deterministic names.
+    * writer. Exactly-once: checkpoint + deterministic names. A
+    * `rotate.schedule.interval.ms` runs through [[startScheduled]].
     */
   def start(
       records: DataFrame,
@@ -76,19 +76,10 @@ object ParityPipeline {
       payload: Column,
       extractor: TimestampExtractor = RecordTimestamp,
       queryName: String = "graft-parity-sink"): StreamingQuery = {
-    val trigger =
-      if (cfg.rotateScheduleIntervalMs > 0)
-        Trigger.ProcessingTime(cfg.rotateScheduleIntervalMs) // R4
-      else Trigger.ProcessingTime(0L)
-    records.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeMicroBatch(batch, cfg, partitioner, format, baseDir, payload, extractor)
-        ()
-      }
-      .start()
+    require(cfg.rotateScheduleIntervalMs <= 0,
+      "start has no rotate.schedule.interval.ms; use startScheduled for day-aligned rotation")
+    sinkQuery(records, cfg, partitioner, format, baseDir, checkpointDir, payload, extractor,
+      queryName, Trigger.ProcessingTime(0L))
   }
 
   /** R4 faithful form: scheduled rotation aligned to the day boundary of
@@ -114,19 +105,27 @@ object ParityPipeline {
     require(cfg.rotateScheduleIntervalMs > 0,
       "startScheduled requires rotate.schedule.interval.ms > 0")
     RotationSchedule.schedule(
-      () => records.writeStream
-        .queryName(queryName)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          writeMicroBatch(batch, cfg, partitioner, format, baseDir, payload, extractor)
-          ()
-        }
-        .start(),
+      () => sinkQuery(records, cfg, partitioner, format, baseDir, checkpointDir, payload,
+        extractor, queryName, Trigger.AvailableNow()),
       cfg.rotateScheduleIntervalMs,
       java.time.ZoneId.of(cfg.rotateScheduleTimezone),
       clock, sleeper)
   }
+
+  /** The streaming query both entries run: each micro-batch through [[writeMicroBatch]]. */
+  private def sinkQuery(records: DataFrame, cfg: PipelineConfig, partitioner: Partitioner,
+                        format: OutputFormat, baseDir: String, checkpointDir: String,
+                        payload: Column, extractor: TimestampExtractor, queryName: String,
+                        trigger: Trigger): StreamingQuery =
+    records.writeStream
+      .queryName(queryName)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        writeMicroBatch(batch, cfg, partitioner, format, baseDir, payload, extractor)
+        ()
+      }
+      .start()
 
   /** One micro-batch through the parity sink — also the direct entry the
     * batch tests use (`foreachBatch` body, `TopicPartitionWriter.write()`
@@ -140,37 +139,7 @@ object ParityPipeline {
       baseDir: String,
       payload: Column,
       extractor: TimestampExtractor = RecordTimestamp): OffsetNamedSink.BatchResult =
-    format match {
-      case p: ParquetFormat =>
-        // Honor `payload` for parquet exactly like the other formats: a
-        // struct column → its FIELDS are the file schema; lit(null)
-        // (NullType) → the whole batch row is the payload.
-        batch.select(payload.as("__p")).schema.head.dataType match {
-          case st: StructType =>
-            val inner = st.fieldNames.toSeq
-            val routing = Seq("topic", "partition", "offset", "timestamp")
-              .filter(batch.columns.contains)
-            // refuse shadowing rather than silently grouping/naming files
-            // by a payload field — offsetsToCommit computed from a payload
-            // 'offset' would corrupt the exactly-once contract
-            val clash = inner.intersect(routing)
-            require(clash.isEmpty,
-              s"parquet payload struct fields $clash collide with Kafka routing " +
-                "columns; rename them in the payload (e.g. payload_offset)")
-            val flat = batch
-              .select(routing.map(col) :+ payload.as("__p"): _*)
-              .select(routing.map(col) ++ inner.map(f => col(s"__p.`$f`")): _*)
-            OffsetNamedSink.writeBatchParquet(
-              flat, cfg, partitioner, p, baseDir, inner, extractor)
-          case org.apache.spark.sql.types.NullType =>
-            OffsetNamedSink.writeBatchParquet(
-              batch, cfg, partitioner, p, baseDir, batch.schema.fieldNames.toSeq, extractor)
-          case other => throw new IllegalArgumentException(
-            s"parquet payload must be a struct column or lit(null), got $other")
-        }
-      case other =>
-        OffsetNamedSink.writeBatch(batch, cfg, partitioner, other, baseDir, payload, extractor)
-    }
+    OffsetNamedSink.writeBatch(batch, cfg, partitioner, format, baseDir, payload, extractor)
 
   /** R5 schema-change rotation for a batch of (schemaId → payload-struct)
     * records: NONE rotates files on every schema change (schema id joins
@@ -187,24 +156,19 @@ object ParityPipeline {
       format: OutputFormat,
       baseDir: String,
       toPayload: DataFrame => Column): OffsetNamedSink.BatchResult = {
-    // parquet needs the rename-based writer; the streamed byte writer
-    // throws for it — dispatch per format like writeMicroBatch does.
     // Parquet writes ONLY the `payload` struct (the same record content
     // toPayload serializes for the byte formats) — never the batch's
     // scratch/routing columns.
     require(batch.columns.contains("payload"),
       "writeEvolving expects a `payload` struct column")
-    def dispatch(df: DataFrame, extraGroupCols: Seq[Column]): OffsetNamedSink.BatchResult =
-      format match {
-        case p: ParquetFormat =>
-          OffsetNamedSink.writeBatchParquet(
-            df, cfg, partitioner, p, baseDir, Seq("payload"),
-            extraGroupCols = extraGroupCols)
-        case other =>
-          OffsetNamedSink.writeBatch(
-            df, cfg, partitioner, other, baseDir, toPayload(df),
-            extraGroupCols = extraGroupCols)
-      }
+    def land(df: DataFrame, extraGroupCols: Seq[Column]): OffsetNamedSink.BatchResult =
+      OffsetNamedSink.writeBatch(df, cfg, partitioner, format, baseDir,
+        if (format.isInstanceOf[ParquetFormat]) struct(col("payload")) else toPayload(df),
+        extraGroupCols = extraGroupCols)
+    // E2: the payload struct projected onto `target` by SchemaCompat's field rule
+    def projected(target: StructType): DataFrame = batch.withColumn("payload", struct(
+      SchemaCompat.projectFields(batch.schema("payload").dataType.asInstanceOf[StructType],
+        target)(col("payload").getField): _*))
     cfg.compatibility match {
       case SchemaCompat.None_ =>
         // Rotation happens on every schema CHANGE (TopicPartitionWriter
@@ -217,19 +181,11 @@ object ParityPipeline {
           1).otherwise(0)
         val withRun = batch.withColumn("__schemaRun",
           sum(changed).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        dispatch(withRun, Seq(col("__schemaRun")))
+        land(withRun, Seq(col("__schemaRun")))
       case SchemaCompat.Backward | SchemaCompat.Full =>
-        dispatch(projectPayload(batch, schemas(schemas.keys.max)), Nil)
+        land(projected(schemas(schemas.keys.max)), Nil)
       case SchemaCompat.Forward =>
-        dispatch(projectPayload(batch, schemas(schemas.keys.min)), Nil)
+        land(projected(schemas(schemas.keys.min)), Nil)
     }
   }
-
-  /** Project the `payload` struct column of `batch` onto `target`
-    * (cast(null) is already null, so a plain cast per field suffices).
-    */
-  private def projectPayload(batch: DataFrame, target: StructType): DataFrame =
-    batch.withColumn("payload", struct(
-      target.fields.toSeq.map(f =>
-        col("payload").getField(f.name).cast(f.dataType).as(f.name)): _*))
 }

@@ -36,6 +36,9 @@ class CardinalityStoreSpec extends SparkTestBase {
     // idempotence: register-max union means a replayed batch is a no-op
     CardinalityStore.update(spark, dir, batch)
     assert(ests(dir) == warm, "replaying the same batch must not move estimates")
+    // commit hygiene: no .tmp / .old residue after a successful swap
+    val left = new java.io.File(dir).list().toSet
+    assert(left == Set("sketches.parquet"), s"residue: $left")
   }
 
   test("union is monotone: adding users never lowers an estimate") {

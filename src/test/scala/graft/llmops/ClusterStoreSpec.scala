@@ -41,6 +41,9 @@ class ClusterStoreSpec extends SparkTestBase {
       cold(docs.filter(col("doc_id") % 3 =!= 2)))
     ClusterStore.update(spark, dir, docs.filter(col("doc_id") % 3 === 2))
     assert(got(spark.read.parquet(s"$dir/labels.parquet")) == cold(docs))
+    // commit hygiene: no .tmp / .old residue after a successful swap
+    val left = new java.io.File(dir).list().toSet
+    assert(left == Set("labels.parquet", "grams.parquet"), s"residue: $left")
   }
 
   test("streaming twin: 3 micro-batches, store == cold recompute per epoch") {

@@ -471,5 +471,8 @@ class Round7dOpsSpec extends SparkTestBase {
     assert(warm == cold)
     BloomStore.update(spark, dir, odd) // at-least-once replay
     assert(words(spark.read.parquet(s"$dir/words.parquet")) == warm)
+    // commit hygiene: no .tmp / .old residue after a successful swap
+    val left = new java.io.File(dir).list().toSet
+    assert(left == Set("words.parquet", "meta.parquet"), s"residue: $left")
   }
 }

@@ -1,5 +1,7 @@
 package graft.sink
 
+import org.apache.spark.sql.functions.{col, struct}
+
 import graft.SparkTestBase
 import graft.core.PipelineConfig
 import graft.partition.DefaultPartitioner
@@ -11,9 +13,9 @@ class CompactionSpec extends SparkTestBase {
 
   private def ingest(base: String, flushSize: Int = 100): Unit = {
     val df = kafkaRecords("c", nParts = 2, perPart = 1000)
-    OffsetNamedSink.writeBatchParquet(
+    OffsetNamedSink.writeBatch(
       df, PipelineConfig(flushSize = flushSize), DefaultPartitioner,
-      ParquetFormat(), base, payloadCols = Seq("offset", "a", "b"))
+      ParquetFormat(), base, payload = struct(col("offset"), col("a"), col("b")))
   }
 
   test("compaction: many small files become few, content and provenance preserved") {
@@ -71,9 +73,9 @@ class CompactionSpec extends SparkTestBase {
     // records never rewritten by this compaction run
     val lateDf = kafkaRecords("c", nParts = 1, perPart = 1100)
       .where("offset >= 1000 and offset < 1100")
-    OffsetNamedSink.writeBatchParquet(
+    OffsetNamedSink.writeBatch(
       lateDf, PipelineConfig(flushSize = 100), DefaultPartitioner,
-      ParquetFormat(), base.toString, payloadCols = Seq("offset", "a", "b"))
+      ParquetFormat(), base.toString, payload = struct(col("offset"), col("a"), col("b")))
     val late = listFiles(base).find(_.endsWith(f"c+0+${1000}%010d.parquet")).get
     val latePath = new org.apache.hadoop.fs.Path(s"$base/$late").toUri.getPath
     assert(!snapshot.contains(latePath))
@@ -103,9 +105,9 @@ class CompactionSpec extends SparkTestBase {
     // (byte-identical copies — the sink's idempotent-naming guarantee)
     val staleDf = kafkaRecords("c", nParts = 1, perPart = 1000)
       .where("offset >= 600 and offset < 700")
-    OffsetNamedSink.writeBatchParquet(
+    OffsetNamedSink.writeBatch(
       staleDf, PipelineConfig(flushSize = 100), DefaultPartitioner,
-      ParquetFormat(), base.toString, payloadCols = Seq("offset", "a", "b"))
+      ParquetFormat(), base.toString, payload = struct(col("offset"), col("a"), col("b")))
     assert(listFiles(base).exists(_.endsWith(f"c+0+${600}%010d.parquet")))
 
     val res = Compaction.compactParquet(spark, base.toString,

@@ -328,9 +328,9 @@ class SinkSpec extends SparkTestBase {
     val base = tmpDir()
     val cfg = PipelineConfig(flushSize = 400)
     val df = kafkaRecords("p", nParts = 2, perPart = 1000)
-    val res = OffsetNamedSink.writeBatchParquet(
+    val res = OffsetNamedSink.writeBatch(
       df, cfg, DefaultPartitioner, ParquetFormat("snappy"), base.toString,
-      payloadCols = Seq("a", "b"))
+      payload = struct(col("a"), col("b")))
     val expected = for {
       p <- 0 to 1; o <- Seq(0, 400, 800)
     } yield f"topics/p/partition=$p/p+$p+$o%010d.parquet"
@@ -340,6 +340,27 @@ class SinkSpec extends SparkTestBase {
     assert(back.count() == 400)
     assert(back.columns.toSet == Set("a", "b"))
     assert(res.files.map(_.records).sum == 2000)
+  }
+
+  test("parquet: a payload field named `offset` neither names files nor commits offsets") {
+    val base = tmpDir()
+    val cfg = PipelineConfig(flushSize = 400)
+    val df = kafkaRecords("po", nParts = 2, perPart = 1000)
+    val res = ParityPipeline.writeMicroBatch(df, cfg, DefaultPartitioner, ParquetFormat(),
+      base.toString, payload = struct((col("offset") * 1000 + 7).as("offset"), col("a")))
+    val expected = for {
+      p <- 0 to 1; o <- Seq(0, 400, 800)
+    } yield f"topics/po/partition=$p/po+$p+$o%010d.parquet"
+    assert(listFiles(base) == expected.sorted)
+    assert(res.files.map(f => (f.startOffset, f.endOffset)).distinct.sorted ==
+      Seq((0L, 399L), (400L, 799L), (800L, 999L)))
+    assert(res.offsetsToCommit == Map(("po", 0) -> 1000L, ("po", 1) -> 1000L))
+    // the payload's own `offset` is written as given
+    val back = spark.read.parquet(
+      base.resolve(f"topics/po/partition=1/po+1+${400}%010d.parquet").toString)
+    assert(back.columns.toSeq == Seq("offset", "a"))
+    val bounds = back.agg(min("offset"), max("offset")).head()
+    assert((bounds.getLong(0), bounds.getLong(1)) == ((400007L, 799007L)))
   }
 
   test("time-based rotation (R2): event-time buckets split files") {

@@ -54,9 +54,9 @@ class SourcesSpec extends SparkTestBase {
   test("landed files read back with offset provenance from their names") {
     val base = Files.createTempDirectory("graft-src-landed")
     val df = kafkaRecords("lp", nParts = 2, perPart = 500)
-    OffsetNamedSink.writeBatchParquet(
+    OffsetNamedSink.writeBatch(
       df, PipelineConfig(flushSize = 200), DefaultPartitioner,
-      ParquetFormat(), base.toString, payloadCols = Seq("a", "b"))
+      ParquetFormat(), base.toString, payload = struct(col("a"), col("b")))
     val back = graft.sources.LandedFiles.readParquet(spark, base.toString)
     assert(back.count() == 1000)
     val prov = back.groupBy("_topic", "_kafka_partition", "_file_start_offset")

@@ -94,6 +94,21 @@ class RotationScheduleSpec extends SparkTestBase {
     } finally rot.stop()
   }
 
+  test("start refuses a rotation schedule and names startScheduled") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val cfg = PipelineConfig(flushSize = 1000, rotateScheduleIntervalMs = 50)
+    val stream = MemoryStream[(String, Int, Long, Long)]
+    val records = stream.toDF().toDF("topic", "partition", "offset", "a")
+    val e = intercept[IllegalArgumentException] {
+      ParityPipeline.start(records, cfg, DefaultPartitioner, JsonFormat(),
+        Files.createTempDirectory("graft-nosched").toString,
+        Files.createTempDirectory("graft-nosched-ckpt").toString,
+        payload = to_json(struct(col("a")))).stop()
+    }
+    assert(e.getMessage.contains("startScheduled"))
+  }
+
   test("scheduled drains: each aligned boundary runs one AvailableNow cycle") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
