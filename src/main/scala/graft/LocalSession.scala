@@ -3,8 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE definition of the local session every main (Bench, Verify,
-  * Profile, ScaleSmoke, PlanAudit, ExplainFmt, ExplainOne)
-  * and the test suites (`SparkTestBase`) run on. Each main used to
+  * Profile, ScaleSmoke) and the test suites (`SparkTestBase`) run on. Each main used to
   * carry its own copy of this builder block — which is exactly how a
   * scaffold-era `local[4]` default survived a whole round in
   * Bench/Verify while Profile already said 32: shared config must have
@@ -48,12 +47,10 @@ import org.apache.spark.sql.SparkSession
   * string: the driver holds one full copy per job, however large the
   * plan. The cap bounds that memory for any description. Spark's own doc for this conf says to
   * lower it when plan strings take up too much memory or cause
-  * OutOfMemory errors. The cap is 1m, not Spark's example of 8k:
-  * `ExplainFmt`, `ExplainOne` and `PlanAudit` print plans through this
-  * session, the committed dumps under `plans/` are checked against
-  * those files, and the largest of them
-  * (`plans/r15/q168_containment_sketch_audit_before.txt`) is 32,309
-  * characters, which 1m keeps whole.
+  * OutOfMemory errors. The cap is 1m, not Spark's example of 8k, so that
+  * it never cuts a registry query's `df.explain("formatted")`: the
+  * largest run to ~30k characters (q168's 32,309 at sf0.1, q36's 29,337
+  * at sf0.001), which 1m keeps whole.
   *
   * Spark's generated-class cache holds 1000 entries
   * (`spark.sql.codegen.cache.maxEntries`; Spark's default is 100). The

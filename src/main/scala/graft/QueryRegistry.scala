@@ -39,5 +39,6 @@ object QueryRegistry {
       graft.llmops.BloomStore.all ++
       graft.llmops.CMSStore.all
 
-  def byName(name: String): QuerySpec = all.find(_.name == name).get
+  def byName(name: String): QuerySpec = all.find(_.name == name).getOrElse(
+    throw new IllegalArgumentException(s"no registry query named $name"))
 }

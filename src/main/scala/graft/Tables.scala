@@ -18,9 +18,10 @@ object Tables {
     * hand the same StructType to the reader explicitly, which skips
     * inference entirely. METADATA reuse only: no rows or results are
     * cached, every query still computes from the parquet bytes, and the
-    * scan's ReadSchema/PushedFilters are unchanged (plans/r16
-    * before/after dumps are structurally identical). Keyed by (path,
-    * every conf that changes parquet inference) because inference maps
+    * scan's ReadSchema/PushedFilters are unchanged (the memo leaves each
+    * query's `plans/ledger.tsv` row, scans and ReadSchema width, as it
+    * is). Keyed by (path, every conf that changes parquet inference)
+    * because inference maps
     * TIMESTAMP(NANOS)/NTZ columns, unannotated binary, INT96, merged
     * footers and column-name case differently under those flags — a
     * session with different settings must re-infer, never inherit a
@@ -61,7 +62,7 @@ object Tables {
 
   /** `events.ts` is TIMESTAMP(NANOS) parquet, which Spark's vectorized
     * reader rejects. Sessions set `spark.sql.legacy.parquet.nanosAsLong`
-    * (see [[graft.GraftSession]]), so the column arrives as nano-epoch
+    * (see [[LocalSession]]), so the column arrives as nano-epoch
     * longs and is truncated here to a microsecond timestamp — the same
     * ns→µs truncation DuckDB applies on `CAST(ts AS TIMESTAMP)`, which the
     * oracle SQL mirrors.

@@ -120,6 +120,47 @@ object PlanGate {
     out.result()
   }
 
+  // ------------------------------------------------------ plan-shape ledger
+  import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+  import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+  import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+  import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+
+  /** Column names of `plans/ledger.tsv` (PLANS.md has the legend). */
+  val ledgerHeader: String = Seq("query", "exchange", "bcast_exchange",
+    "smj", "bhj", "nl_join", "window", "rdd_scan", "parquet_scan",
+    "read_width", "violations").mkString("\t")
+
+  /** `name`'s row of the plan-shape ledger: operator counts of the plan
+    * Spark starts from (the executed plan, or under AQE the adaptive
+    * node's initial plan: planning only, nothing runs, and AQE's run-time
+    * re-planning never shows), then the [[hintViolations]] and
+    * [[violations]] kinds with their counts (`-` for none).
+    */
+  def ledgerRow(name: String, df: DataFrame): String = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    def count(pf: PartialFunction[SparkPlan, Int]) = plan.collect(pf).sum
+    val parquet = plan.collect {
+      case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[ParquetFileFormat] => s
+    }
+    val kinds = (hintViolations(df) ++ violations(df)).groupBy(_.kind).toSeq
+      .sortBy(_._1).map { case (kind, vs) => s"$kind:${vs.size}" }
+    (name +: Seq(
+      count { case _: ShuffleExchangeExec => 1 },
+      count { case _: BroadcastExchangeExec => 1 },
+      count { case _: SortMergeJoinExec => 1 },
+      count { case _: BroadcastHashJoinExec => 1 },
+      count { case _: BroadcastNestedLoopJoinExec | _: CartesianProductExec => 1 },
+      count { case _: WindowExec => 1 },
+      count { case _: RDDScanExec => 1 },
+      parquet.size,
+      parquet.map(_.requiredSchema.length).sum).map(_.toString) :+
+      (if (kinds.isEmpty) "-" else kinds.mkString(","))).mkString("\t")
+  }
+
   /** All contract violations in `df`'s pre-AQE physical plan. */
   def violations(df: DataFrame): Seq[Violation] = {
     val out = Seq.newBuilder[Violation]

@@ -154,13 +154,34 @@ class PlanGateSpec extends SparkTestBase {
     "q231_cms_audit" -> ("the CMS store's counter table — FIXED sketch " +
       "size (depth×width counters, set at store build time)"))
 
-  test("registry plans: no unreviewed broadcast hints") {
+  /** One query's planned results: kept small, because a DataFrame would
+    * keep its checkpoint blocks alive for the rest of the run.
+    */
+  private final case class Planned(
+      hints: Seq[PlanGate.Violation], violations: Seq[PlanGate.Violation], row: String)
+
+  /** Every registry query built and planned once per run, at sf0.001; a
+    * query that fails to build keeps its error message.
+    */
+  private lazy val planned: Map[String, Either[String, Planned]] = {
     val dir = sf("sf0.001")
+    QueryRegistry.all.map { q =>
+      q.name -> (try {
+        val df = q.run(spark, dir)
+        Right(Planned(PlanGate.hintViolations(df), PlanGate.violations(df),
+          PlanGate.ledgerRow(q.name, df)))
+      } catch { case e: Throwable => Left(String.valueOf(e.getMessage)) })
+    }.toMap
+  }
+
+  private def plannedOrFail(n: String): Planned =
+    planned(n).fold(e => fail(s"$n failed to plan: $e"), identity)
+
+  private def sweep(rule: Planned => Seq[PlanGate.Violation],
+                    exempt: Map[String, String]): Unit = {
     val failures = QueryRegistry.all.flatMap { q =>
-      val vs =
-        try PlanGate.hintViolations(q.run(spark, dir))
-        catch { case e: Throwable => Seq(PlanGate.Violation("plan-error", e.getMessage)) }
-      if (vs.isEmpty || reviewedBroadcastHints.contains(q.name)) Nil
+      val vs = planned(q.name).fold(e => Seq(PlanGate.Violation("plan-error", e)), rule)
+      if (vs.isEmpty || exempt.contains(q.name)) Nil
       else Seq(q.name -> vs)
     }
     assert(failures.isEmpty, failures.map { case (n, vs) =>
@@ -168,35 +189,55 @@ class PlanGateSpec extends SparkTestBase {
     }.mkString)
   }
 
+  test("registry plans: no unreviewed broadcast hints") {
+    sweep(_.hints, reviewedBroadcastHints)
+  }
+
   test("broadcast-hint whitelist entries are live") {
-    val dir = sf("sf0.001")
     reviewedBroadcastHints.keys.foreach { n =>
       assert(QueryRegistry.all.exists(_.name == n), s"stale hint whitelist entry: $n")
-      assert(PlanGate.hintViolations(QueryRegistry.byName(n).run(spark, dir)).nonEmpty,
+      assert(plannedOrFail(n).hints.nonEmpty,
         s"hint whitelist entry $n no longer violates — remove the exemption")
     }
   }
 
   test("registry plans: no unbounded global window / BNL join / cartesian") {
-    val dir = sf("sf0.001")
-    val failures = QueryRegistry.all.flatMap { q =>
-      val vs =
-        try PlanGate.violations(q.run(spark, dir))
-        catch { case e: Throwable => Seq(PlanGate.Violation("plan-error", e.getMessage)) }
-      if (vs.isEmpty || valueDomainWindows.contains(q.name)) Nil
-      else Seq(q.name -> vs)
-    }
-    assert(failures.isEmpty, failures.map { case (n, vs) =>
-      s"\n$n:\n  ${vs.mkString("\n  ")}"
-    }.mkString)
+    sweep(_.violations, valueDomainWindows)
   }
 
   test("whitelist entries are live (no stale exemptions)") {
-    val dir = sf("sf0.001")
     valueDomainWindows.keys.foreach { n =>
       assert(QueryRegistry.all.exists(_.name == n), s"stale whitelist entry: $n")
-      assert(PlanGate.violations(QueryRegistry.byName(n).run(spark, dir)).nonEmpty,
+      assert(plannedOrFail(n).violations.nonEmpty,
         s"whitelist entry $n no longer violates — remove the exemption")
+    }
+  }
+
+  /** `plans/ledger.tsv` is the registry's committed plan shape, one row per
+    * query ([[PlanGate.ledgerRow]]); a plan change shows as a row diff.
+    */
+  test("plan-shape ledger matches plans/ledger.tsv") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val fresh = PlanGate.ledgerHeader +: QueryRegistry.all.map(_.name).sorted.map { n =>
+      planned(n).fold(e => s"$n\tplan-error: $e", _.row)
+    }
+    val committedPath = Paths.get("plans", "ledger.tsv")
+    val committed =
+      if (Files.exists(committedPath)) Files.readAllLines(committedPath).asScala.toSeq
+      else Nil
+    if (fresh != committed) {
+      val out = Paths.get("target", "plans-ledger.tsv")
+      Files.createDirectories(out.getParent)
+      Files.write(out, fresh.asJava)
+      def keyed(rows: Seq[String]) = rows.map(r => r.takeWhile(_ != '\t') -> r).toMap
+      val (was, now) = (keyed(committed), keyed(fresh))
+      val changed = (was.keySet ++ now.keySet).toSeq.sorted
+        .filter(k => was.get(k) != now.get(k))
+        .map(k => s"\n  $k\n    committed: ${was.getOrElse(k, "(none)")}" +
+          s"\n    now:       ${now.getOrElse(k, "(none)")}")
+      fail(s"${changed.size} row(s) of $committedPath differ from the plans:" +
+        changed.mkString + s"\nif the change is intended: cp $out $committedPath")
     }
   }
 }

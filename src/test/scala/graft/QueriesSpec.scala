@@ -19,6 +19,11 @@ class QueriesSpec extends SparkTestBase {
     }
   }
 
+  test("byName rejects an unknown name and says which") {
+    val e = intercept[IllegalArgumentException](QueryRegistry.byName("q0_no_such_query"))
+    assert(e.getMessage.contains("q0_no_such_query"))
+  }
+
   test("oracle SQL exists for every ANSI-expressible query") {
     val oracled = QueryRegistry.all.count(_.oracle.isDefined)
     assert(oracled >= 30)
