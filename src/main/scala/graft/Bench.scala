@@ -1,11 +1,21 @@
 package graft
 
+import java.lang.management.ManagementFactory
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-/** The driver's bench: every registry query, timed in one warm session.
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+
+/** The one harness that runs and times registry queries, in one warm
+  * session.
   *
   * Each query runs `SPARK_GRAFT_BENCH_ITERS` times (default 3) and
   * reports the median, which one GC/JIT/scheduling spike in either
@@ -18,13 +28,15 @@ import scala.util.control.NonFatal
   * Output:
   *   - one stdout line ([[stdoutLine]]) for the driver's recorded tail;
   *   - one artifact line ([[artifactLine]]) with every query's
-  *     median/min/max and the run's noise context, written to
+  *     median/min/max and `layers` (its median run's [[Layers]] and its
+  *     `plan_changes`) and the run's noise context, written to
   *     `SPARK_GRAFT_BENCH_OUT` and appended to `SPARK_GRAFT_BENCH_HIST`.
   *
-  * Settings (environment): `SPARK_GRAFT_SF_DIR` (tables, default sf0.1),
-  * `SPARK_GRAFT_BENCH_ITERS`, `SPARK_GRAFT_BENCH_ONLY` (comma-separated
-  * query-name prefixes; unset = the whole registry), `SPARK_GRAFT_BENCH_OUT`
-  * and `SPARK_GRAFT_BENCH_HIST`.
+  * Settings (environment): `SPARK_GRAFT_SF_DIR` (tables, default sf0.1; a
+  * `ScaleSmoke` corpus such as /tmp/graft-scale-10x works too),
+  * `SPARK_GRAFT_BENCH_ITERS`, `SPARK_GRAFT_ONLY` (the queries to run, see
+  * [[QueryRegistry.selected]]), `SPARK_GRAFT_BENCH_OUT` and
+  * `SPARK_GRAFT_BENCH_HIST`.
   */
 object Bench {
   val FailurePenaltySec = 3600.0
@@ -32,8 +44,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val iterations = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").toSeq.filter(_.nonEmpty))
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft-bench.json")
     val hist = sys.env.getOrElse("SPARK_GRAFT_BENCH_HIST", "/tmp/graft-bench-history.jsonl")
     val (load1Start, stealStart) = (load1(), stealSec())
@@ -43,22 +53,12 @@ object Bench {
     spark.range(1000000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000)
       .groupBy("l_returnflag").count().collect()
-    val samples = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-      .sortBy(_._1).map { case (name, fn) =>
-        name -> (1 to iterations).map { _ =>
-          val t0 = System.nanoTime()
-          try { fn(spark, sfDir).queryExecution.toRdd.count(); (System.nanoTime() - t0) / 1e9 }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}"); FailurePenaltySec
-          }
-        }.sorted
-      }
+    val measured = measure(spark, sfDir, iterations,
+      QueryRegistry.all.filter(q => QueryRegistry.selected(q.name)))
     val noise = Noise(Runtime.getRuntime.availableProcessors, load1Start, load1(),
       for { s0 <- stealStart; s1 <- stealSec() } yield s1 - s0)
-    val medians = samples.map { case (n, ts) => n -> median(ts) }.toMap
-    println(stdoutLine(medians, out, sfDir))
-    val line = artifactLine(samples, sfDir, noise, System.currentTimeMillis / 1000) + "\n"
+    println(stdoutLine(measured.map(m => m.name -> m.median.sec).toMap, out, sfDir))
+    val line = artifactLine(measured, sfDir, noise, System.currentTimeMillis / 1000) + "\n"
     try Files.write(Paths.get(out), line.getBytes(UTF_8))
     catch { case e: Throwable => System.err.println(s"[bench] file write failed: ${e.getMessage}") }
     try Files.write(Paths.get(hist), line.getBytes(UTF_8),
@@ -67,7 +67,126 @@ object Bench {
     spark.stop()
   }
 
-  private def median(sorted: Seq[Double]): Double = sorted(sorted.length / 2)
+  /** What one run's Spark jobs did, as the listener bus reports them.
+    * A `Materialize` job has a stage named from a call site in
+    * `Materialize.scala`; `top` holds the three longest stages (name, ms, tasks). */
+  final class Layers {
+    var jobs, stages, materializeJobs = 0
+    var tasks, shuffleReadBytes, shuffleWriteBytes = 0L
+    var top = List.empty[(String, Long, Int)]
+
+    private[Bench] def add(s: StageInfo): Unit = {
+      stages += 1
+      tasks += s.numTasks
+      Option(s.taskMetrics).foreach { m =>
+        shuffleReadBytes += m.shuffleReadMetrics.totalBytesRead
+        shuffleWriteBytes += m.shuffleWriteMetrics.bytesWritten
+      }
+      val ms = (for { a <- s.submissionTime; b <- s.completionTime } yield b - a).getOrElse(0L)
+      top = ((s.name.takeWhile(_ != '\n').take(60), ms, s.numTasks) :: top)
+        .sortBy { case (_, t, _) => -t }.take(3)
+    }
+  }
+
+  /** One timed run of a query: its seconds, the JVM's GC time (local mode runs
+    * one JVM, so per-task GC times would count concurrent tasks twice) and
+    * classes compiled while it ran, its final plan's hash, and its [[Layers]]. */
+  final case class Run(sec: Double, gcMs: Long, compiled: Long, planHash: String,
+                       layers: Layers)
+
+  final case class Measured(name: String, runs: Seq[Run]) {
+    val sorted: Seq[Run] = runs.sortBy(_.sec)
+    def median: Run = sorted(sorted.length / 2)
+    /** Runs whose final plan differs from the first run's. */
+    def planChanges: Int = runs.count(_.planHash != runs.head.planHash)
+  }
+
+  private val TagKey = "graft.bench"
+  private val DrainTag = "drain"
+
+  /** Attributes each job, and its stages, to the run tagged in the job's
+    * `graft.bench` local property, which Spark SQL passes on to the threads
+    * it submits broadcast, subquery and adaptive map-stage jobs from. */
+  private final class LayerListener extends SparkListener {
+    private val byTag = new ConcurrentHashMap[String, Layers]
+    private val stageRun = new ConcurrentHashMap[Int, Layers]
+    val drained = new CountDownLatch(1)
+
+    def track(tag: String): Layers = { val l = new Layers; byTag.put(tag, l); l }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).map(_.getProperty(TagKey)).orNull match {
+        case null => ()
+        case DrainTag => drained.countDown()
+        case tag => Option(byTag.get(tag)).foreach { l =>
+          l.jobs += 1
+          if (e.stageInfos.exists(_.name.contains("at Materialize.scala:"))) l.materializeJobs += 1
+          e.stageIds.foreach(stageRun.putIfAbsent(_, l))
+        }
+      }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      Option(stageRun.remove(e.stageInfo.stageId)).foreach(_.add(e.stageInfo))
+  }
+
+  /** Runs each of `specs` `iterations` times on `spark`, in name order,
+    * recording each run's [[Layers]]. Returns once a marker job, posted
+    * after every event of the last run, has reached the listener. */
+  def measure(spark: SparkSession, sfDir: String, iterations: Int,
+              specs: Seq[QuerySpec]): Seq[Measured] = {
+    val sc = spark.sparkContext
+    val listener = new LayerListener
+    sc.addSparkListener(listener)
+    try {
+      val measured = specs.sortBy(_.name).map { q =>
+        Measured(q.name, (1 to iterations).map { i =>
+          val tag = s"${q.name}#$i"
+          val layers = listener.track(tag)
+          sc.setLocalProperty(TagKey, tag)
+          val (gc0, compiled0) = (gcMs(), CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+          val t0 = System.nanoTime()
+          val (sec, hash) =
+            try {
+              val df = q.run(spark, sfDir)
+              df.queryExecution.toRdd.count()
+              ((System.nanoTime() - t0) / 1e9, planHash(df))
+            } catch { case e: Throwable =>
+              System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
+              (FailurePenaltySec, "failed")
+            }
+          Run(sec, gcMs() - gc0, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0,
+            hash, layers)
+        })
+      }
+      sc.setLocalProperty(TagKey, DrainTag)
+      sc.parallelize(Seq(1), 1).count()
+      if (!listener.drained.await(5, TimeUnit.MINUTES))
+        System.err.println("[bench] listener bus did not drain; layer counts may be short")
+      measured
+    } finally {
+      sc.setLocalProperty(TagKey, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def gcMs(): Long =
+    ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
+
+  /** A hash of the final physical plan, as AQE left it after the run.
+    * AQE's wrappers and query stages are replaced by the plans they ran,
+    * and the tree is canonicalized, so that expression ids do not count;
+    * plan ids and whole-stage codegen ids, which number nodes in the
+    * order Spark makes them, are left out of its text. Only the hash is
+    * kept: a DataFrame holds its checkpoint blocks alive.
+    */
+  private def planHash(df: DataFrame): String = {
+    def ran(p: SparkPlan): SparkPlan = p.transform {
+      case a: AdaptiveSparkPlanExec => ran(a.executedPlan)
+      case s: QueryStageExec => ran(s.plan)
+    }
+    val text = ran(df.queryExecution.executedPlan).canonicalized.treeString
+    Integer.toHexString(text.replaceAll("""\[plan_id=\d+\]|\*\(\d+\) """, "").hashCode)
+  }
 
   /** Whether the machine was noisy during the run: its cores, its
     * 1-minute load average at start and end, and the CPU seconds the host
@@ -143,19 +262,33 @@ object Bench {
     head + jsonMap(entries.map { case (k, v) => k -> fmtSec(v) }) + tail
   }
 
+  private def layersJson(m: Measured): String = {
+    val r = m.median
+    val l = r.layers
+    val top = l.top.map { case (n, ms, t) =>
+      s"""{"stage":${Verify.jsonString(n)},"ms":$ms,"tasks":$t}""" }.mkString("[", ",", "]")
+    jsonMap(Seq("jobs" -> l.jobs, "stages" -> l.stages, "tasks" -> l.tasks,
+      "materialize_jobs" -> l.materializeJobs, "shuffle_read_bytes" -> l.shuffleReadBytes,
+      "shuffle_write_bytes" -> l.shuffleWriteBytes, "gc_ms" -> r.gcMs,
+      "compiled" -> r.compiled, "plan_changes" -> m.planChanges)
+      .map { case (k, v) => k -> v.toString } :+ ("top_stages" -> top))
+  }
+
   /** The one line both the artifact and the history file hold: every
-    * query's median (`queries`), `min` and `max` over its sorted
-    * `samples`, their total, the run's time and tables, and its noise.
+    * query's median (`queries`), `min` and `max` over its runs, their
+    * total, the run's time and tables, its noise, and each query's
+    * `layers`.
     */
-  def artifactLine(samples: Seq[(String, Seq[Double])], sfDir: String,
+  def artifactLine(measured: Seq[Measured], sfDir: String,
                    noise: Noise, epochSec: Long): String = {
-    def per(stat: Seq[Double] => Double): String =
-      jsonMap(samples.map { case (n, ts) => n -> fmtSec(stat(ts)) })
-    val total = samples.map { case (_, ts) => median(ts) }.sum
+    def per(stat: Measured => Run): String =
+      jsonMap(measured.map(m => m.name -> fmtSec(stat(m).sec)))
+    val total = measured.map(_.median.sec).sum
     s"""{"ts":$epochSec,"metric":"total","value":${fmtSec(total)},"unit":"sec",""" +
-      s""""queries":${per(median)},"min":${per(_.head)},"max":${per(_.last)},""" +
-      s""""n_queries":${samples.size},"sf":"$sfDir",""" +
+      s""""queries":${per(_.median)},"min":${per(_.sorted.head)},"max":${per(_.sorted.last)},""" +
+      s""""n_queries":${measured.size},"sf":"$sfDir",""" +
       s""""noise":{"nproc":${noise.nproc},"load1_start":${fmtOpt(noise.load1Start)},""" +
-      s""""load1_end":${fmtOpt(noise.load1End)},"steal_s":${fmtOpt(noise.stealSec)}}}"""
+      s""""load1_end":${fmtOpt(noise.load1End)},"steal_s":${fmtOpt(noise.stealSec)}},""" +
+      s""""layers":${jsonMap(measured.map(m => m.name -> layersJson(m)))}}"""
   }
 }

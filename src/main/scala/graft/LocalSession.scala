@@ -3,11 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE definition of the local session every main (Bench, Verify,
-  * Profile, ScaleSmoke) and the test suites (`SparkTestBase`) run on. Each main used to
-  * carry its own copy of this builder block — which is exactly how a
-  * scaffold-era `local[4]` default survived a whole round in
-  * Bench/Verify while Profile already said 32: shared config must have
-  * one home.
+  * ScaleSmoke) and the test suites (`SparkTestBase`) run on: shared
+  * config must have one home, or the mains drift apart in width and
+  * settings.
   *
   * Parquet timestamp handling (both settings together make the engine
   * layout-agnostic across testdata generations):

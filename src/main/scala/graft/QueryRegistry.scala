@@ -39,6 +39,11 @@ object QueryRegistry {
       graft.llmops.BloomStore.all ++
       graft.llmops.CMSStore.all
 
+  /** Whether `SPARK_GRAFT_ONLY` (comma-separated name prefixes, e.g.
+    * `q91,q92`; unset = every query) selects `name` for Bench and Verify. */
+  def selected(name: String): Boolean = only.forall(_.exists(name.startsWith))
+  private val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq.filter(_.nonEmpty))
+
   def byName(name: String): QuerySpec = all.find(_.name == name).getOrElse(
     throw new IllegalArgumentException(s"no registry query named $name"))
 }

@@ -1,17 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.functions._
 
-/** Scale-sensitivity harness: materializes an N× corpus (doc_id-shifted,
-  * per-copy-perturbed so near-dup results stay meaningful) as a
-  * MULTI-FILE parquet directory — exercising the many-input-splits path
-  * the production corpus has — then times the document-centric operators
-  * on it. The point is the SHAPE of the curve, not the absolute numbers:
+/** Scale-sensitivity corpus: writes an N× copy of a tables directory to
+  * /tmp/graft-scale-Nx. Documents and embeddings are multiplied (doc_id-
+  * and vec_id-shifted, per-copy-perturbed so near-dup results stay
+  * meaningful) as MULTI-FILE parquet directories — exercising the
+  * many-input-splits path the production corpus has; the other tables are
+  * copied as they are, so every registry query runs on the corpus. The
+  * point is the SHAPE of the curve, not the absolute numbers:
   * candidate-join operators whose runtime grows super-linearly in corpus
   * size would fail the 100 TB design goal long before any cluster did.
   *
   *   sbt "runMain graft.ScaleSmoke 10 /root/testdata/sf0.1"
+  *   SPARK_GRAFT_SF_DIR=/tmp/graft-scale-10x SPARK_GRAFT_ONLY=q27_,q65 sbt "runMain graft.Bench"
   */
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
@@ -44,84 +47,16 @@ object ScaleSmoke {
       .repartition(16)
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
 
-    // the document/embedding-only subset (the rest need the TPC-H tables)
-    val names = Seq(
-      "q27_ngram_jaccard", "q30_dedup_minhash_lsh", "q31_dedup_simhash",
-      "q55_tfidf", "q56_repetition", "q57_winnowing_overlap",
-      "q58_decontamination", "q59_stratified_sample", "q60_data_mixture",
-      "q61_stratified_sample_fast", "q62_data_mixture_fast",
-      "q63_image_meta", "q64_sequence_packing", "q65_pii_redaction",
-      "q66_corpus_profile", "q68_boilerplate_ngrams", "q69_neardup_clusters",
-      "q70_length_outlier_trim", "q71_temperature_mixture",
-      "q72_canonical_per_cluster", "q73_incremental_exact_dedup",
-      "q74_incremental_neardup", "q76_audio_meta",
-      "q77_corpus_snapshot_diff", "q78_ngram_novelty",
-      "q29_embedding_topk", "q32_embedding_lsh_neardup", "q38_embedding_ivf_topk",
-      "q67_knn_label", "q75_embedding_pq_topk",
-      "q84_unigram_surprisal", "q85_chunk_dedup", "q88_source_overlap",
-      "q89_zipf_spectrum", "q90_tokenizer_efficiency",
-      "q91_bloom_decontamination", "q92_importance_resample",
-      "q93_bigram_perplexity", "q94_quality_gate", "q95_semantic_dedup",
-      "q96_hard_negatives", "q97_video_meta", "q98_boilerplate_strip",
-      "q101_connected_components", "q102_shingle_containment",
-      "q103_nb_quality_classifier", "q104_bpe_merges",
-      "q105_curriculum_phases", "q106_heavy_hitters", "q107_bm25",
-      "q108_incremental_cc", "q109_span_decontamination",
-      "q110_distribution_drift", "q111_longest_shared_span",
-      "q112_repetition_loops", "q113_containment_sketch",
-      "q116_contrastive_views", "q117_span_corruption",
-      "q119_cluster_store_update", "q121_embedding_dim_stats",
-      "q123_dedup_verdict", "q124_sliding_chunks", "q126_bigram_pmi",
-      "q127_length_deciles", "q128_source_dup_scorecard",
-      "q130_degree_distribution", "q131_cluster_size_distribution",
-      "q136_charclass_profile", "q137_token_entropy",
-      "q139_jaccard_candidate_audit", "q140_neyman_sample",
-      "q141_cosine_range_search", "q142_ingest_novelty",
-      "q144_nn_cosine_histogram", "q145_curation_funnel",
-      "q146_weighted_sample", "q147_prefix_filter_join", "q148_bm25_store",
-      "q154_blocklist_gate", "q155_decile_normalize",
-      "q158_dedup_token_budget", "q159_decontaminated_split",
-      "q160_source_signature_terms", "q162_pagerank_lite",
-      "q165_rank_fusion", "q166_ks_distance", "q167_token_gini",
-      "q168_containment_sketch_audit", "q170_dp_release", "q171_cdc_chunks",
-      "q172_triangle_count", "q173_kmeans_assign", "q175_lsh_recall_audit",
-      "q178_kcenter_coreset", "q179_phrase_search", "q180_nb_calibration",
-      "q181_repeated_span_manifest", "q184_candidate_threshold_sweep",
-      "q185_centroid_drift", "q186_editdist_verify",
-      "q187_kcore_decomposition", "q188_stitch_overlap",
-      "q189_random_projection", "q191_kanon_release",
-      "q192_power_iteration", "q193_sparse_cosine_join",
-      "q194_anisotropy_audit", "q195_ivf_recall_audit",
-      "q196_pq_recall_audit", "q197_simhash_recall_audit",
-      "q198_rendezvous_sharding", "q199_vocab_growth",
-      "q200_pareto_front", "q201_vocab_store_audit",
-      "q202_scalar_quant_audit",
-      "q203_source_lang_mi", "q204_chi2_terms", "q206_token_waterfill",
-      "q207_padding_waste", "q208_greedy_set_cover", "q209_mutual_nn",
-      "q210_kwic_concordance", "q211_rbo_rank_agreement",
-      "q212_topk_store_audit", "q214_zipf_slope", "q215_centroid_outliers",
-      "q216_l_diversity", "q217_t_closeness", "q218_local_clustering",
-      "q221_bloom_bits_audit", "q222_bloom_store_audit",
-      "q223_kneser_ney_bigram", "q224_bootstrap_ci", "q225_edge_support",
-      "q228_w1_drift", "q229_negative_sampling", "q230_hill_tail_index",
-      "q231_cms_audit", "q232_cms_store_audit", "q233_skipgram_cooc",
-      "q236_dbscan", "q237_silhouette", "q238_ari_purity",
-      "q239_cluster_nmi", "q240_kdist_profile", "q241_ams_f2_audit",
-      "q243_dedup_savings",
-      // media codecs run from documents too (round 13: previously only
-      // timed singly at 10x; in the sweep so future scale runs cover them)
-      "q249_png_pixel_decode", "q250_wav_pcm_decode")
-    println(s"== corpus ${nDocs * mult} docs / ${nEmb * mult} vectors, 16 files each ==")
-    // Local-iteration filter (builder tooling, mirrors Verify's):
-    // comma-separated name prefixes, e.g. SPARK_GRAFT_SMOKE_ONLY=q218,q221.
-    val only = sys.env.get("SPARK_GRAFT_SMOKE_ONLY")
-      .map(_.split(",").toSeq.filter(_.nonEmpty))
-    names.filter(n => only.forall(_.exists(n.startsWith))).foreach { n =>
-      val q = QueryRegistry.byName(n)
-      val t0 = System.nanoTime()
-      val rows = q.run(spark, out).queryExecution.toRdd.count()
-      println(f"$n%-28s ${(System.nanoTime() - t0) / 1e9}%7.2fs  rows=$rows")
-    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(src).getFileSystem(conf)
+    fs.listStatus(new Path(src)).map(_.getPath)
+      .filterNot(p => Set("documents.parquet", "embeddings.parquet")(p.getName))
+      .foreach { p =>
+        val dst = new Path(out, p.getName)
+        fs.delete(dst, true)
+        FileUtil.copy(fs, p, fs, dst, false, conf)
+      }
+    println(s"== corpus ${nDocs * mult} docs / ${nEmb * mult} vectors, 16 files each, in $out ==")
     spark.stop()
   }
 }

@@ -8,34 +8,30 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = LocalSession()
     new java.io.File(outDir).mkdirs()
-    // Local-iteration filter (builder tooling; driver sets no env → full run):
-    // comma-separated name prefixes, e.g. SPARK_GRAFT_VERIFY_ONLY=q91,q92.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").toSeq.filter(_.nonEmpty))
-    def selected(name: String): Boolean =
-      only.forall(_.exists(name.startsWith))
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
+    // SPARK_GRAFT_ONLY unset, as in the correctness run, dumps every query.
+    SparkEntry.queries.filter(kv => QueryRegistry.selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    * — a tab or CR in a query's oracle SQL would otherwise make the
+    * compare's json.load fail and drop every query's check. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

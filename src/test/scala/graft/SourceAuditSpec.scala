@@ -66,8 +66,7 @@ class SourceAuditSpec extends AnyFunSuite {
     "sink/OffsetNamedSink.scala" -> (1, "per-micro-batch file manifest " +
       "— batch-bounded by admission control"),
     "Bench.scala" -> (2, "bench warm-up probes (tooling main, not an " +
-      "operator)"),
-    "Profile.scala" -> (1, "profiling tool main"))
+      "operator)"))
 
   /** file → reviewed `crossJoin(` occurrence count. The class argument,
     * once for all entries: every production crossJoin here pairs a 1-row
@@ -197,6 +196,23 @@ class SourceAuditSpec extends AnyFunSuite {
          |and update reviewedCollects.
          |unexpected: ${(actual.toSet -- expected.toSet).toSeq.sorted}
          |missing:    ${(expected.toSet -- actual.toSet).toSeq.sorted}""".stripMargin)
+  }
+
+  test("every main and spec the docs name has a file under src") {
+    val sources = {
+      val it = java.nio.file.Files.walk(java.nio.file.Paths.get("src")).iterator()
+      val b = Set.newBuilder[String]
+      while (it.hasNext) b += it.next().getFileName.toString
+      b.result()
+    }
+    val named = for {
+      doc <- Seq("README.md", "STATUS.md", ".claude/skills/verify/SKILL.md")
+      text = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(doc)),
+        java.nio.charset.StandardCharsets.UTF_8)
+      m <- """runMain graft\.(\w+)|\b(\w+Spec)\b""".r.findAllMatchIn(text)
+    } yield doc -> Option(m.group(1)).getOrElse(m.group(2))
+    val missing = named.distinct.filterNot { case (_, n) => sources(s"$n.scala") }
+    assert(missing.isEmpty, s"docs name mains or specs that do not exist: $missing")
   }
 
   test("every main-source crossJoin site is reviewed") {
